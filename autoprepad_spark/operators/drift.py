@@ -12,9 +12,13 @@ Scale design:
   anything else happens. The hot "web" source is harmless here because
   map-side partial aggregation already collapses it per task; an optional
   salted two-phase is provided for degenerate single-bucket skew.
-* baseline vs current is a full-outer join on (source, bucket) of two tiny
-  frames, then PSI/chi² math runs per source in applyInPandas (grouped-map
-  pandas UDF — vectorized, no per-row Python).
+* baseline vs current: both histograms are |sources| x |buckets| rows, so
+  drift() collects them, full-outer joins them on (source, bucket) with
+  SQL's null semantics and scores each source on the driver in sorted
+  bucket order (the same numpy math per source, no Python worker task).
+  The scored rows return as a DataFrame over Arrow. A suite run passes
+  the current histogram straight from its fit's cells (bucket_counts),
+  so drift costs no scan of its own.
 
 chi-square p-value is computed with a numpy implementation of the
 regularized upper incomplete gamma Q(k/2, x/2) (series + continued
@@ -24,10 +28,13 @@ fraction), since scipy is not a dependency.
 from __future__ import annotations
 
 import math
+from collections import defaultdict
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window as W, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F, types as T
+
+from autoprepad_spark.session import local_frame
 
 PSI_EPS = 1e-6
 DEFAULT_BUCKET_WIDTH = 64
@@ -59,6 +66,22 @@ def ntok_histogram(
         )
         return p1.groupBy("source", "bucket").agg(F.sum("_c").alias("cnt"))
     return base.groupBy("source", bucket).agg(F.count(F.lit(1)).alias("cnt"))
+
+
+def bucket_counts(
+    cells, *, bucket_width: int = DEFAULT_BUCKET_WIDTH
+) -> list[tuple[str, int, int]]:
+    """ntok_histogram's (source, bucket, cnt) rows from (source, value,
+    cnt) cells on the driver — e.g. profile.source_ntok_counts, which a
+    suite run already collected for its fit. Same bucketing (floor of
+    the double quotient) and the same nulls dropped."""
+    out: dict = {}
+    for src, v, n in cells:
+        if src is None or v is None:
+            continue
+        key = (src, math.floor(v / bucket_width))
+        out[key] = out.get(key, 0) + n
+    return [(s, b, n) for (s, b), n in out.items()]
 
 
 _DRIFT_SCHEMA = T.StructType(
@@ -246,6 +269,73 @@ def ks_drift(
     )
 
 
+def collect_histogram(hist: DataFrame) -> list[tuple]:
+    """A (source, bucket, cnt) histogram frame's rows, on the driver."""
+    return [tuple(r) for r in hist.select("source", "bucket", "cnt").collect()]
+
+
+def _full_outer(baseline: list, current: list) -> dict:
+    """{source: [(bucket, baseline_cnt, current_cnt), ...]} — the
+    full-outer join of two (source, bucket, cnt) row lists on (source,
+    bucket) as SQL computes it: a key holding a null matches nothing,
+    and a repeated key pairs with every match."""
+    def key(s, b):
+        return (s, b) if s is not None and b is not None else None
+
+    cur = defaultdict(list)
+    for s, b, n in current:
+        cur[key(s, b)].append(n)
+    base_keys = set()
+    out = defaultdict(list)
+    for s, b, n in baseline:
+        k = key(s, b)
+        base_keys.add(k)
+        for m in (cur[k] if k is not None and k in cur else [None]):
+            out[s].append((b, n, m))
+    for s, b, n in current:
+        k = key(s, b)
+        if k is None or k not in base_keys:
+            out[s].append((b, None, n))
+    return out
+
+
+def drift_from_counts(
+    spark: SparkSession,
+    baseline: list,
+    current: list,
+    *,
+    psi_fail: float = PSI_FAIL,
+    chi2_alpha: float = CHI2_ALPHA,
+) -> DataFrame:
+    """drift() over (source, bucket, cnt) row lists already on the
+    driver. Each source is scored by _drift_one_source over its joined
+    buckets in sorted order, so the result is a pure function of the two
+    histograms whatever order their rows arrived in."""
+    def order(row):
+        return tuple((x is None, 0 if x is None else x) for x in row)
+
+    joined = _full_outer(baseline, current)
+    scored = [
+        _drift_one_source(pd.DataFrame(
+            [(src, *r) for r in sorted(joined[src], key=order)],
+            columns=["source", "bucket", "baseline_cnt", "current_cnt"],
+        ).astype({"baseline_cnt": "float64", "current_cnt": "float64"}))
+        for src in sorted(joined, key=lambda x: (x is None, x or ""))
+    ]
+    pdf = pd.concat(scored, ignore_index=True) if scored else pd.DataFrame()
+    return (
+        local_frame(spark, pdf, _DRIFT_SCHEMA)
+        .withColumn("psi_fail", (F.col("psi") > psi_fail))
+        .withColumn("chi2_fail", (F.col("chi2_pvalue") < chi2_alpha))
+        .withColumn(
+            "status",
+            F.when(F.col("psi_fail") | F.col("chi2_fail"), F.lit("fail")).otherwise(
+                F.lit("pass")
+            ),
+        )
+    )
+
+
 def drift(
     baseline_hist: DataFrame,
     current_hist: DataFrame,
@@ -258,19 +348,12 @@ def drift(
     Returns (source, psi, chi2_stat, chi2_dof, chi2_pvalue, n_buckets,
     baseline_n, current_n, psi_fail, chi2_fail, status).
     """
-    b = baseline_hist.select("source", "bucket", F.col("cnt").alias("baseline_cnt"))
-    c = current_hist.select("source", "bucket", F.col("cnt").alias("current_cnt"))
-    joined = b.join(c, ["source", "bucket"], "full_outer")
-    scored = joined.groupBy("source").applyInPandas(_drift_one_source, _DRIFT_SCHEMA)
-    return (
-        scored.withColumn("psi_fail", (F.col("psi") > psi_fail))
-        .withColumn("chi2_fail", (F.col("chi2_pvalue") < chi2_alpha))
-        .withColumn(
-            "status",
-            F.when(F.col("psi_fail") | F.col("chi2_fail"), F.lit("fail")).otherwise(
-                F.lit("pass")
-            ),
-        )
+    return drift_from_counts(
+        baseline_hist.sparkSession,
+        collect_histogram(baseline_hist),
+        collect_histogram(current_hist),
+        psi_fail=psi_fail,
+        chi2_alpha=chi2_alpha,
     )
 
 

@@ -327,13 +327,16 @@ def hs_mass_scores(
     reference-window semantics) — at 10^12 rows you would persist
     `leaves` once instead of recomputing it for both branches; at
     validation scale the double scan is cheaper than the checkpoint.
+    Rows with a null or NaN in any scored column are left out of both
+    the fit and the output: a NaN would otherwise become its column's
+    max and move every other row's box.
     """
     for c in [*cols, *key_cols]:
         if c not in df.columns:
             raise ValueError(f"column {c!r} not in frame")
     cond = None
     for c in cols:
-        k = F.col(c).isNotNull()
+        k = F.col(c).isNotNull() & ~F.isnan(F.col(c))
         cond = k if cond is None else (cond & k)
     complete = df.filter(cond)
     # min/max fit on the SAME null-complete population the trees score
@@ -383,7 +386,9 @@ def hs_oracle_sql(
         f'max(CAST("{c}" AS DOUBLE)) AS mx{j}'
         for j, c in enumerate(cols)
     )
-    nonnull = " AND ".join(f'"{c}" IS NOT NULL' for c in cols)
+    nonnull = " AND ".join(
+        f'"{c}" IS NOT NULL AND NOT isnan(CAST("{c}" AS DOUBLE))' for c in cols
+    )
     branches = " UNION ALL ".join(
         "SELECT {k}, {t} AS tree, {f} AS leaf FROM norm".format(
             k=keys, t=t, f=frag.replace("`", '"'))

@@ -84,10 +84,14 @@ class CustomCheck:
                (e.g. a suggested null-rate ceiling derived from the
                observed rate). Ignored when hard=True.
 
-    Predicates evaluate JVM-side (whole-stage codegen) regardless of
-    the suite's marking engine, so arrow and native runs produce
-    identical custom flags. Expressions may reference any input column,
-    including extra columns beyond the declared schema."""
+    SQL-string and native Column predicates evaluate JVM-side
+    (whole-stage codegen) regardless of the suite's marking engine, so
+    arrow and native runs produce identical custom flags. A Column
+    backed by a pandas UDF — such as the bounds-as-data range check
+    suggest.grouped_to_custom_checks emits above max_arms_per_check —
+    evaluates in Arrow Python workers instead, with the same flags.
+    Expressions may reference any input column, including extra columns
+    beyond the declared schema."""
 
     name: str
     predicate: Column | str

@@ -244,6 +244,56 @@ def profile(df: DataFrame, *, exact_quantiles: bool = True) -> DataFrame:
     return wide.join(q, "part", "left")
 
 
+def source_ntok_counts(df: DataFrame) -> list[tuple]:
+    """(source, n_tok, cnt) cells from ONE column-pruned hash-agg scan,
+    nulls kept as their own cells. Summed over source they are
+    global_stats' histogram; bucketed per source they are the drift
+    histogram (drift.bucket_counts) — so a suite run fits and profiles
+    drift from one scan. At most |sources| x |n_tok domain| cells."""
+    rows = df.groupBy("source", "n_tok").agg(F.count(F.lit(1)).alias("cnt")).collect()
+    return [(r["source"], r["n_tok"], r["cnt"]) for r in rows]
+
+
+def stats_from_ntok_counts(cells) -> ProfileStats:
+    """ProfileStats from (n_tok, cnt) cells; repeated n_tok values (one
+    cell per source, say) are merged first. Row count, min/max, mean,
+    ddof=1 stddev AND the exact quantiles/MAD all derive from the cells
+    driver-side in float64."""
+    merged: dict = {}
+    for v, n in cells:
+        merged[v] = merged.get(v, 0) + n
+    n_rows = int(sum(merged.values()))
+    if not n_rows:
+        return ProfileStats(0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0)
+    # sort cells by value: collect order is scheduler-dependent and
+    # would leak into the last ulps of mean/std via np.dot's
+    # accumulation order (see stats._robust_from_hist) — sorted, the
+    # fit is a pure function of the histogram multiset
+    nn = sorted((v, n) for v, n in merged.items() if v is not None)
+    if nn:
+        v = np.array([x for x, _ in nn], dtype=np.float64)
+        c = np.array([n for _, n in nn], dtype=np.int64)
+        n = int(c.sum())
+        mean = float(np.dot(v, c) / n)
+        var = float(np.dot(c, (v - mean) ** 2) / (n - 1)) if n > 1 else 0.0
+        q1, med, q3 = weighted_quantiles(v, c, [0.25, 0.5, 0.75])
+        mad = mad_from_counts(v, c, med)
+        vmin, vmax = float(v.min()), float(v.max())
+    else:
+        mean = var = q1 = med = q3 = mad = vmin = vmax = 0.0
+    return ProfileStats(
+        n_rows=n_rows,
+        mean_n_tok=mean,
+        std_n_tok=float(np.sqrt(var)),
+        q1_n_tok=q1,
+        median_n_tok=med,
+        q3_n_tok=q3,
+        mad_n_tok=mad,
+        min_n_tok=vmin,
+        max_n_tok=vmax,
+    )
+
+
 def global_stats(df: DataFrame, *, exact_quantiles: bool = True) -> ProfileStats:
     """Collect the global fit stats from ONE column-pruned scan.
 
@@ -256,38 +306,7 @@ def global_stats(df: DataFrame, *, exact_quantiles: bool = True) -> ProfileStats
     profile with HLL distinct counts lives in profile()."""
     if exact_quantiles:
         hist = df.groupBy("n_tok").agg(F.count(F.lit(1)).alias("cnt")).collect()
-        n_rows = int(sum(r["cnt"] for r in hist))
-        if not n_rows:
-            return ProfileStats(0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0)
-        # sort cells by value: collect order is scheduler-dependent and
-        # would leak into the last ulps of mean/std via np.dot's
-        # accumulation order (see stats._robust_from_hist) — sorted, the
-        # fit is a pure function of the histogram multiset
-        nn = sorted(
-            (r["n_tok"], r["cnt"]) for r in hist if r["n_tok"] is not None
-        )
-        if nn:
-            v = np.array([x for x, _ in nn], dtype=np.float64)
-            c = np.array([n for _, n in nn], dtype=np.int64)
-            n = int(c.sum())
-            mean = float(np.dot(v, c) / n)
-            var = float(np.dot(c, (v - mean) ** 2) / (n - 1)) if n > 1 else 0.0
-            q1, med, q3 = weighted_quantiles(v, c, [0.25, 0.5, 0.75])
-            mad = mad_from_counts(v, c, med)
-            vmin, vmax = float(v.min()), float(v.max())
-        else:
-            mean = var = q1 = med = q3 = mad = vmin = vmax = 0.0
-        return ProfileStats(
-            n_rows=n_rows,
-            mean_n_tok=mean,
-            std_n_tok=float(np.sqrt(var)),
-            q1_n_tok=q1,
-            median_n_tok=med,
-            q3_n_tok=q3,
-            mad_n_tok=mad,
-            min_n_tok=vmin,
-            max_n_tok=vmax,
-        )
+        return stats_from_ntok_counts((r["n_tok"], r["cnt"]) for r in hist)
 
     row = df.agg(
         F.count(F.lit(1)).alias("n_rows"),

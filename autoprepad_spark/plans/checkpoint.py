@@ -12,16 +12,24 @@ writes a new file — the same append semantics an Iceberg table gives via
 snapshot appends; swap `CheckpointTable` for a `df.writeTo(...).append()`
 on a real catalog). Idempotence: completed_parts() de-duplicates on
 (run_id, part), so a re-marked partition is harmless.
+
+A fresh run costs no Spark job here: the table's existence is probed
+through the Hadoop FileSystem API, a missing table has no completed
+partitions, and mark() builds its few rows in the JVM
+(session.local_frame) instead of from a Python list, which would start
+a Python worker for the one-task write.
 """
 
 from __future__ import annotations
 
-import os
 import uuid
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from autoprepad_spark.schema import CHECKPOINT_SCHEMA
+from autoprepad_spark.session import local_frame
+from autoprepad_spark.sources.tables import list_names
 
 
 class CheckpointTable:
@@ -30,8 +38,9 @@ class CheckpointTable:
         self.path = path
 
     def _exists(self) -> bool:
-        return os.path.isdir(self.path) and any(
-            f.endswith(".parquet") for f in _walk_files(self.path)
+        return any(
+            f.endswith(".parquet")
+            for f in list_names(self.spark, self.path, recursive=True)
         )
 
     def read(self) -> DataFrame:
@@ -40,6 +49,8 @@ class CheckpointTable:
         return self.spark.read.schema(CHECKPOINT_SCHEMA).parquet(self.path)
 
     def completed_parts(self, run_id: str) -> list[str]:
+        if not self._exists():
+            return []
         rows = (
             self.read()
             .filter((F.col("run_id") == run_id) & (F.col("status") == "done"))
@@ -57,7 +68,8 @@ class CheckpointTable:
     ) -> None:
         """parts: [(part, n_rows, n_violations, wall_sec), ...] — one append."""
         rows = [(run_id, p, status, int(n), int(v), float(w)) for p, n, v, w in parts]
-        df = self.spark.createDataFrame(rows, schema=CHECKPOINT_SCHEMA)
+        pdf = pd.DataFrame(rows, columns=CHECKPOINT_SCHEMA.fieldNames())
+        df = local_frame(self.spark, pdf, CHECKPOINT_SCHEMA)
         df.coalesce(1).write.mode("append").parquet(self.path)
 
     def remaining(self, df: DataFrame, run_id: str) -> DataFrame:
@@ -71,12 +83,6 @@ class CheckpointTable:
         if not done:
             return df
         return df.filter(~F.col("part").isin(done))
-
-
-def _walk_files(root: str):
-    for dirpath, _dirs, files in os.walk(root):
-        for f in files:
-            yield os.path.join(dirpath, f)
 
 
 def new_run_id() -> str:

@@ -8,11 +8,16 @@ Reference lifecycle (SURVEY.md §3): construct plan -> fit (aggregations)
     result.verdicts / result.violations / result.drift
 
 Job graph — the token payload (the table's dominant bytes) is scanned
-exactly ONCE per run:
-  1. fit: ONE n_tok value-count histogram scan (column-pruned, never
-     touches `tokens`); count/min/max/mean/std and the exact
-     quantiles/MAD all derive from it driver-side
-  2. the violations job (runs once, materialized eagerly): marking (JVM
+exactly ONCE per run, and nothing outside the marking UDF starts a
+Python worker:
+  1. fit: ONE groupBy(source, n_tok) count scan (column-pruned, never
+     touches `tokens`), collected; count/min/max/mean/std and the exact
+     quantiles/MAD derive from its cells summed over source, and the
+     drift histogram is bucketed from the same cells — all driver-side
+  2. resume: the checkpoint's completed set is read once (no job at all
+     when the checkpoint table does not exist yet) and prunes both the
+     marking scan and the uniqueness branch
+  3. the violations job (runs once, materialized eagerly): marking (JVM
      array reductions + Arrow predicate UDF — the single pass that reads
      `tokens`), with the referential check INLINED as a literal isin
      flag (dimension collected once — no separate fact scan/anti-join)
@@ -20,8 +25,11 @@ exactly ONCE per run:
      uniqueness branch (column-pruned scan, 8-byte shuffle keys) and a
      fused per-partition row-count branch — so verdict assembly needs no
      extra pass over the input at all
-  3. verdict assembly from the materialized violation set (tiny)
-  4. drift: histogram agg + grouped-map PSI/chi²
+  4. verdict assembly from the materialized violation set (tiny; the
+     part x check grid is an explode of a literal array, no join)
+  5. drift: the baseline histogram is collected and every source scored
+     driver-side against the fit's cells — no scan, join or grouped-map
+     UDF of its own
 Resume: partitions already in the checkpoint table are pruned from the
 scan (partition-pruning filter), uniqueness stays global so cross-
 partition duplicates are still caught.
@@ -43,7 +51,12 @@ from autoprepad_spark.operators.marking import (
     mark_slim,
     validate_custom_checks,
 )
-from autoprepad_spark.operators.profile import ProfileStats, global_stats
+from autoprepad_spark.operators.profile import (
+    ProfileStats,
+    global_stats,
+    source_ntok_counts,
+    stats_from_ntok_counts,
+)
 from autoprepad_spark.operators.uniqueness import duplicate_rows
 from autoprepad_spark.plans import verdicts as V
 from autoprepad_spark.plans.checkpoint import CheckpointTable
@@ -140,11 +153,23 @@ class ValidationSuite:
             if any(i.kind in ("missing", "type_mismatch") for i in issues):
                 raise ValueError(f"input schema does not conform: {issues}")
 
-        # fit statistics ALWAYS over the full table (resume-deterministic)
+        # fit statistics ALWAYS over the full table (resume-deterministic);
+        # the exact fit's (source, n_tok) cells also give drift its
+        # current histogram, so drift costs no scan of its own
+        cells = None
+        if baseline_hist is not None or (stats is None and self.exact_quantiles):
+            cells = source_ntok_counts(df)
         if stats is None:
-            stats = global_stats(df, exact_quantiles=self.exact_quantiles)
+            if self.exact_quantiles:
+                stats = stats_from_ntok_counts((v, n) for _, v, n in cells)
+            else:
+                stats = global_stats(df, exact_quantiles=False)
 
-        todo = checkpoint.remaining(df, run_id) if checkpoint and run_id else df
+        # the completed set is read once and prunes both the marking scan
+        # and the uniqueness branch
+        done = checkpoint.completed_parts(run_id) if checkpoint and run_id else []
+        not_done = ~F.col("part").isin(done)
+        todo = df.filter(not_done) if done else df
 
         custom = validate_custom_checks(self.custom_checks)
         custom_names = [c.name for c in custom]
@@ -158,15 +183,14 @@ class ValidationSuite:
         # Referential check: the dimension side must fit executor memory
         # to be broadcastable at all, so collect it once and inline the
         # check into the marking pass as a literal isin flag — no second
-        # fact-table scan, no anti-join.
+        # fact-table scan, no anti-join. (De-duplicated on the driver: a
+        # distinct would add a shuffle job for a table this small.)
         allowed = None
         if dim is not None and "ref_source" in selected:
             d = dim
             if "active" in dim.columns:
                 d = d.filter(F.col("active"))
-            allowed = sorted(
-                r["source"] for r in d.select("source").distinct().collect()
-            )
+            allowed = sorted({r["source"] for r in d.select("source").collect()})
 
         # The plan's marking pass carries no token passthrough (the
         # validator never emits tokens), so the arrow engine uses the
@@ -204,10 +228,8 @@ class ValidationSuite:
                     F.lit(None).cast("string").alias("detail"),
                 )
             )
-            if checkpoint and run_id:
-                done = checkpoint.completed_parts(run_id)
-                if done:
-                    dup_viol = dup_viol.filter(~F.col("part").isin(done))
+            if done:
+                dup_viol = dup_viol.filter(not_done)
 
         # per-partition row counts ride the same job as a fused branch
         # (tagged rows in the union) instead of costing their own scan
@@ -250,7 +272,10 @@ class ValidationSuite:
         cached = []
         if violation_sink is not None:
             violations.write.mode("overwrite").parquet(violation_sink)
-            violations = df.sparkSession.read.parquet(violation_sink)
+            # the schema is known: reading it back needs no footer job
+            violations = df.sparkSession.read.schema(violations.schema).parquet(
+                violation_sink
+            )
         else:
             violations = violations.cache()
             violations.count()
@@ -279,8 +304,11 @@ class ValidationSuite:
 
         drift_df = None
         if baseline_hist is not None:
-            current = drift_mod.ntok_histogram(df, bucket_width=self.bucket_width)
-            drift_df = drift_mod.drift(baseline_hist, current)
+            drift_df = drift_mod.drift_from_counts(
+                df.sparkSession,
+                drift_mod.collect_histogram(baseline_hist),
+                drift_mod.bucket_counts(cells, bucket_width=self.bucket_width),
+            )
 
         return ValidationResult(
             stats=stats,

@@ -11,7 +11,28 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+
+#: bounds of the default driver heap, in MB
+_HEAP_MIN_MB, _HEAP_MAX_MB = 1024, 16 * 1024
+
+
+def default_driver_mem() -> str:
+    """Half of the host's MemAvailable, within [1 GB, 16 GB].
+
+    In local mode the driver heap holds every executor's work, and the
+    JVM's resident size runs well past its heap (metaspace, code cache,
+    Arrow and netty buffers), so a fixed 16g on a ~15 GB host let the
+    kernel OOM-kill the JVM mid-suite. Halving what is available leaves
+    room for that overhead and for the Python workers. Falls back to
+    the upper bound where /proc/meminfo is absent."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemAvailable:"))
+    except (OSError, StopIteration):
+        return f"{_HEAP_MAX_MB}m"
+    return f"{max(_HEAP_MIN_MB, min(_HEAP_MAX_MB, kb // 2048))}m"
 
 
 def get_spark(
@@ -67,7 +88,10 @@ def get_spark(
         # fixed driver-side cost that caps scaling of short write jobs
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_mem(),
+        )
         # G1 (the JDK17 default) collapses under 32 concurrent task threads
         # here (single aggs regress 10-30x from GC storms); throughput GC
         # restores linear behavior. On a cluster this is
@@ -87,3 +111,17 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, pdf: pd.DataFrame, schema: T.StructType) -> DataFrame:
+    """A small driver-side table as a DataFrame built in the JVM.
+
+    ``createDataFrame`` over a Python list scans a Python RDD, so even a
+    one-row write starts a Python worker task. A pandas frame goes over
+    Arrow into a local relation instead; Arrow skips empty frames, so an
+    empty one becomes an empty typed projection."""
+    if len(pdf):
+        return spark.createDataFrame(pdf, schema=schema)
+    return spark.range(0).select(
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+    )

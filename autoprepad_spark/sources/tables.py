@@ -16,11 +16,13 @@ abstracts it so the engine code is backend-agnostic:
 * ``read_csv_typed`` / ``read_json_typed`` — declared-schema ingest with
   the reference's NaN-sentinel normalization and null-on-failure casts
   (XCopySchemaTransformer.py:55-98 re-expressed as native expressions).
+* ``list_names`` — the one existence/listing probe for table
+  directories, through the Hadoop FileSystem of the path's scheme.
 """
 
 from __future__ import annotations
 
-import os
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
@@ -41,7 +43,7 @@ class PartitionedTable:
         self.partition_col = partition_col
 
     def exists(self) -> bool:
-        return os.path.isdir(self.path) and bool(os.listdir(self.path))
+        return any(True for _ in list_names(self.spark, self.path))
 
     def write(self, df: DataFrame, mode: str = "overwrite") -> None:
         df.write.mode(mode).partitionBy(self.partition_col).parquet(self.path)
@@ -69,13 +71,33 @@ class PartitionedTable:
         """Distinct partition values — metadata-only on the hive layout
         (directory listing), like Iceberg's partitions metadata table."""
         prefix = f"{self.partition_col}="
-        if not self.exists():
-            return []
         return sorted(
             d[len(prefix):]
-            for d in os.listdir(self.path)
+            for d in list_names(self.spark, self.path)
             if d.startswith(prefix)
         )
+
+
+def list_names(spark: SparkSession, path: str, *, recursive: bool = False) -> Iterator[str]:
+    """Names of the entries under ``path``: its direct children, or with
+    ``recursive`` every file below it. Listed through the Hadoop
+    FileSystem of the path's scheme (local, ``file:``, ``hdfs:``,
+    ``s3a:``, ...) on the driver, so probing runs no Spark job. Nothing
+    is yielded when ``path`` does not exist; a scheme with no FileSystem
+    on the classpath raises rather than reading as absent, so a remote
+    table can never silently look empty."""
+    jvm = spark.sparkContext._jvm
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    if not fs.exists(p):
+        return
+    if recursive:
+        it = fs.listFiles(p, True)
+        while it.hasNext():
+            yield it.next().getPath().getName()
+    else:
+        for st in fs.listStatus(p):
+            yield st.getPath().getName()
 
 
 # ---------------------------------------------------------------------------

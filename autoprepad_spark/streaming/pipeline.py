@@ -35,8 +35,6 @@ them adds zero extra passes over the batch beyond the one cache.
 
 from __future__ import annotations
 
-import os
-
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
@@ -45,6 +43,7 @@ from autoprepad_spark.operators.marking import mark_slim
 from autoprepad_spark.operators.profile import ProfileStats
 from autoprepad_spark.plans import verdicts as V
 from autoprepad_spark.plans.suite import ALL_CHECKS
+from autoprepad_spark.sources.tables import list_names
 
 
 @dataclass(frozen=True)
@@ -126,8 +125,8 @@ def _dedup_batch(
         T.StructField("content_hash", T.LongType()),
         T.StructField("sig", T.ArrayType(T.LongType())),
     ])
-    if os.path.isdir(cfg.index_path) and any(
-        d.startswith("ingest_batch=") for d in os.listdir(cfg.index_path)
+    if any(
+        d.startswith("ingest_batch=") for d in list_names(spark, cfg.index_path)
     ):
         idx = (
             spark.read.parquet(cfg.index_path)

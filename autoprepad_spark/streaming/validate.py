@@ -342,11 +342,10 @@ def stream_dedup_against_index(
     buckets rebuild per batch as a pure expression over ``sig`` —
     kilobytes per historical doc, no text. Returns the StreamingQuery.
     """
-    import os
-
     from pyspark.sql import Window as W
 
     from autoprepad_spark.operators import incremental as INC
+    from autoprepad_spark.sources.tables import list_names
 
     reader = (
         spark.readStream.schema(schema)
@@ -371,8 +370,8 @@ def stream_dedup_against_index(
         )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if os.path.isdir(index_path) and any(
-            d.startswith("ingest_batch=") for d in os.listdir(index_path)
+        if any(
+            d.startswith("ingest_batch=") for d in list_names(spark, index_path)
         ):
             idx = (
                 spark.read.parquet(index_path)

@@ -229,6 +229,79 @@ def test_drift_psi_chi2_oracle(spark):
     assert 0.0 <= got["chi2_pvalue"] <= 1.0
 
 
+def _drift_grouped_map(bh, ch):
+    """The former distributed drift plan: full-outer join, then one
+    grouped-map pandas UDF per source."""
+    from autoprepad_spark.operators import drift as DR
+
+    b = bh.select("source", "bucket", F.col("cnt").alias("baseline_cnt"))
+    c = ch.select("source", "bucket", F.col("cnt").alias("current_cnt"))
+    return (
+        b.join(c, ["source", "bucket"], "full_outer")
+        .groupBy("source")
+        .applyInPandas(DR._drift_one_source, DR._DRIFT_SCHEMA)
+    )
+
+
+def _by_source(df):
+    return {r["source"]: r.asDict() for r in df.collect()}
+
+
+def test_drift_driver_side_matches_grouped_map(spark):
+    from autoprepad_spark.operators.drift import drift
+
+    rng = np.random.default_rng(5)
+    schema = "source string, bucket int, cnt long"
+    rows_b, rows_c = [], []
+    for s in ("web", "books", None):
+        for i in range(6):
+            rows_b.append((s, i, int(rng.integers(5, 90))))
+            rows_c.append((s, i + (1 if s == "web" else 0), int(rng.integers(5, 90))))
+    rows_b += [("gone", i, 7 + i) for i in range(3)]  # baseline-only source
+    rows_c += [("new", i, 3 + i) for i in range(4)]  # current-only source
+    bh = spark.createDataFrame(rows_b, schema)
+    ch = spark.createDataFrame(rows_c, schema)
+
+    want = _by_source(_drift_grouped_map(bh, ch))
+    got = _by_source(drift(bh, ch))
+    assert set(got) == set(want) == {"web", "books", None, "gone", "new"}
+    for src, w in want.items():
+        g = got[src]
+        for k in ("chi2_dof", "n_buckets", "baseline_n", "current_n"):
+            assert g[k] == w[k], (src, k)
+        for k in ("psi", "chi2_stat", "chi2_pvalue"):
+            assert g[k] == pytest.approx(w[k], rel=1e-12), (src, k)
+    # the full-outer rows of a one-sided source score infinite PSI
+    assert got["gone"]["psi"] == got["new"]["psi"] == float("inf")
+    assert got["gone"]["status"] == got["new"]["status"] == "fail"
+
+    # a pure function of the two histograms: any row order, same values
+    for seed in (1, 2):
+        order = np.random.default_rng(seed)
+        sb = [rows_b[i] for i in order.permutation(len(rows_b))]
+        sc = [rows_c[i] for i in order.permutation(len(rows_c))]
+        again = drift(spark.createDataFrame(sb, schema), spark.createDataFrame(sc, schema))
+        assert _by_source(again) == got
+
+
+def test_fit_cells_bucket_like_ntok_histogram(spark):
+    """The suite's drift histogram (bucketed from the fit's cells) equals
+    ntok_histogram's scan: null sources and null n_tok dropped."""
+    from autoprepad_spark.operators.drift import bucket_counts, ntok_histogram
+    from autoprepad_spark.operators.profile import source_ntok_counts, stats_from_ntok_counts
+
+    rows = [("web", 10), ("web", 70), ("web", 70), ("code", 0), ("code", 129),
+            (None, 5), ("web", None), (None, None), ("code", 64)]
+    df = spark.createDataFrame(rows, "source string, n_tok int")
+    want = sorted(tuple(r) for r in ntok_histogram(df, bucket_width=64).collect())
+    cells = source_ntok_counts(df)
+    assert sorted(bucket_counts(cells, bucket_width=64)) == want
+    assert want == [("code", 0, 1), ("code", 1, 1), ("code", 2, 1),
+                    ("web", 0, 1), ("web", 1, 2)]
+    # the same cells summed over source are global_stats' histogram
+    assert global_stats(df) == stats_from_ntok_counts((v, n) for _, v, n in cells)
+
+
 def _ks_pvalue_ref(d, n_b, n_c):
     import math
 

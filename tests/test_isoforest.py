@@ -178,6 +178,31 @@ def test_hs_constant_column_and_null_rows(spark):
         hs_mass_scores(df, ["zz"], ["id"])
 
 
+def test_hs_nan_row_excluded_in_both_engines(spark, tmp_path):
+    """A NaN in a scored column drops that row like a null does: it no
+    longer becomes the column's max and moves every other row's mass,
+    and the DuckDB oracle filters it identically."""
+    rows = [(i, float(i % 11), float((i * 7) % 13)) for i in range(300)]
+    clean = spark.createDataFrame(rows, schema="id long, a double, b double")
+    dirty = spark.createDataFrame(
+        rows + [(999, float("nan"), 1.0)], schema="id long, a double, b double")
+
+    def masses(df):
+        return {r["id"]: r["total_mass"]
+                for r in hs_mass_scores(df, ["a", "b"], ["id"],
+                                        n_trees=4, depth=4).collect()}
+
+    got = masses(dirty)
+    assert got == masses(clean)
+    p = str(tmp_path / "nan.parquet")
+    dirty.write.parquet(p)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW t AS SELECT * FROM read_parquet('{p}/*.parquet')")
+    want = dict(con.execute(
+        hs_oracle_sql("t", ["a", "b"], ["id"], n_trees=4, depth=4)).fetchall())
+    assert got == want
+
+
 # ---------------------------------------------------------------------------
 # hypothesis: cross-engine mass exactness under adversarial floats
 # ---------------------------------------------------------------------------
