@@ -20,7 +20,7 @@ local table layer (autoprepad_spark.sources.tables) stands in for Iceberg
 with partitioned parquet so the same code runs in the sandbox.
 """
 
-from autoprepad_spark.session import get_spark
+from autoprepad_spark.session import freeze_worker_zip_caches, get_spark
 from autoprepad_spark.plans.suite import CustomCheck, ValidationSuite
 from autoprepad_spark.plans.corpus import clean_corpus
 from autoprepad_spark.operators.tokenizer import bpe_encode, fit_bpe
@@ -38,6 +38,9 @@ from autoprepad_spark.sources.warc import (
     warc_to_documents,
     wet_to_documents,
 )
+
+# Every package UDF unpickles through this import inside a Python worker.
+freeze_worker_zip_caches()
 
 __version__ = "0.1.0"
 

@@ -6,15 +6,19 @@ MedianAbsolutDeviation.py:53-61 modified Z with 0.6745 / 3.5,
 ZTransformerMean.py:47-58 z-score with threshold 3, ddof=1) and counts
 flags per row (TukeyTransformerTotal.py:25-36 row-wise sum).
 
-Two interchangeable predicate engines produce IDENTICAL flags:
+Two predicate engines produce IDENTICAL flags:
 
-* ``arrow``  (default) — one vectorized pandas/Arrow UDF evaluates every
-  row-level predicate over Arrow record batches: numpy/pyarrow kernels
-  only, no per-row Python (north-rule requirement). Token-array
-  structure checks use ListArray offsets + ``np.maximum.reduceat`` so the
-  nested column is traversed once, vectorized.
-* ``native`` — the same predicates as Catalyst Column expressions
-  (whole-stage codegen; fastest JVM path, used as the cross-check).
+* ``mark_slim`` — the production path (the suite, the runner and the
+  streaming faces). The JVM reduces the token arrays to scalars
+  (size/min/max) in one projection, then one vectorized Arrow UDF
+  (``arrow_udf``, pyarrow in / pyarrow out) evaluates every row-level
+  predicate with numpy kernels over Arrow record batches: no per-row
+  Python (north-rule requirement), and the heavy ``tokens`` column
+  never crosses into Python. ``mark(engine="arrow")`` is the same UDF
+  over a pass-through projection that keeps the input columns.
+* ``mark(engine="native")`` — the same predicates as Catalyst Column
+  expressions (whole-stage codegen): the parity oracle the Arrow path
+  is tested against.
 
 Fit statistics arrive as plain floats (broadcast as literals into the
 plan) — the marking pass is a pure map, no shuffle, and preserves the
@@ -27,7 +31,6 @@ import re
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Column, functions as F, types as T
@@ -145,7 +148,7 @@ def _flags_numpy(
     stats: ProfileStats,
     vocab_size: int,
 ) -> dict[str, np.ndarray]:
-    """Shared vectorized predicate kernel (numpy; used by the arrow engine)."""
+    """Vectorized predicate kernel (numpy) behind the Arrow flag UDF."""
     lo, hi = stats.tukey_bounds
     out: dict[str, np.ndarray] = {}
     out["f_null_doc_id"] = doc_null.astype(np.int32)
@@ -168,26 +171,6 @@ def _flags_numpy(
     return out
 
 
-def _list_stats(tokens: pd.Series) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """lengths / per-list min / per-list max via Arrow offsets (vectorized)."""
-    arr = pa.array(tokens, type=pa.list_(pa.int64()))
-    n = len(arr)
-    lengths = pc.list_value_length(arr)
-    lengths = np.asarray(lengths.fill_null(-1), dtype=np.int64)
-    flat = arr.flatten().to_numpy(zero_copy_only=False)
-    offsets = arr.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-    tok_min = np.zeros(n, dtype=np.float64)
-    tok_max = np.zeros(n, dtype=np.float64)
-    if flat.size:
-        starts = np.clip(offsets[:-1], 0, flat.size - 1)
-        mins = np.minimum.reduceat(flat, starts)
-        maxs = np.maximum.reduceat(flat, starts)
-        has = lengths > 0
-        tok_min[has] = mins[has]
-        tok_max[has] = maxs[has]
-    return lengths, tok_min, tok_max
-
-
 def _pack_flags(out: dict[str, np.ndarray]) -> np.ndarray:
     """Pack the per-check 0/1 arrays into one int32 bitmask (bit i =
     ROW_CHECKS[i]) — a single narrow Arrow column back to the JVM instead
@@ -201,10 +184,12 @@ def _pack_flags(out: dict[str, np.ndarray]) -> np.ndarray:
 
 
 def _arrow_array_flag_udf(stats: ProfileStats, vocab_size: int):
-    """pyarrow-native variant (Spark 4 ``arrow_udf``): batches arrive as
+    """The Arrow flag UDF (Spark 4 ``arrow_udf``): batches arrive as
     ``pa.Array`` — no pandas Series/index construction on either side of
-    the exchange, the remaining per-batch cost is pure numpy. Same
-    packed-bitmask output as the pandas variant."""
+    the exchange, the remaining per-batch cost is pure numpy. Takes the
+    JVM-side token-array reductions, never the arrays, and returns the
+    packed flag bitmask (one int32 per row) that the JVM unpacks with
+    shiftright."""
 
     @F.arrow_udf(T.IntegerType())
     def flags(
@@ -218,51 +203,6 @@ def _arrow_array_flag_udf(stats: ProfileStats, vocab_size: int):
         nt = pc.fill_null(n_tok, float("nan")).to_numpy(zero_copy_only=False)
         out = _flags_numpy(dn, lengths, tok_min, tok_max, nt, stats, vocab_size)
         return pa.array(_pack_flags(out), type=pa.int32())
-
-    return flags
-
-
-def _arrow_flag_udf(stats: ProfileStats, vocab_size: int):
-    """Scalar-feed Arrow UDF: all predicates evaluate vectorized in Python
-    over Arrow batches, but the token-array reductions (size/min/max) are
-    computed JVM-side first so the heavy ``tokens`` column never crosses
-    the JVM->Python boundary. At 10^12 rows this is the difference between
-    shipping ~5 doubles/row and shipping the whole token payload (~200
-    int32s/row) through Arrow. Returns a packed flag bitmask (one int32
-    per row); the JVM unpacks bits with shiftright/bit_count."""
-
-    @F.pandas_udf(T.IntegerType())
-    def flags(
-        doc_null: pd.Series, length: pd.Series, tmin: pd.Series,
-        tmax: pd.Series, n_tok: pd.Series,
-    ) -> pd.Series:
-        lengths = length.to_numpy(dtype=np.int64, na_value=-1)
-        tok_min = tmin.to_numpy(dtype=np.float64, na_value=0.0)
-        tok_max = tmax.to_numpy(dtype=np.float64, na_value=0.0)
-        nt = n_tok.to_numpy(dtype=np.float64, na_value=np.nan)
-        out = _flags_numpy(
-            doc_null.to_numpy(dtype=bool), lengths, tok_min, tok_max,
-            nt, stats, vocab_size,
-        )
-        return pd.Series(_pack_flags(out))
-
-    return flags
-
-
-def _arrow_deep_flag_udf(stats: ProfileStats, vocab_size: int):
-    """Deep variant: the token arrays themselves cross into Python and are
-    reduced with Arrow ListArray offsets + np.reduceat. Kept as a parity
-    cross-check for the scalar-feed path (and for callers that need custom
-    per-token predicates Python-side)."""
-
-    @F.pandas_udf(T.IntegerType())
-    def flags(doc_id: pd.Series, tokens: pd.Series, n_tok: pd.Series) -> pd.Series:
-        lengths, tok_min, tok_max = _list_stats(tokens)
-        nt = n_tok.to_numpy(dtype=np.float64, na_value=np.nan)
-        out = _flags_numpy(
-            doc_id.isna().to_numpy(), lengths, tok_min, tok_max, nt, stats, vocab_size
-        )
-        return pd.Series(_pack_flags(out))
 
     return flags
 
@@ -419,7 +359,7 @@ def mark(
     """
     custom = validate_custom_checks(custom)
     if engine == "arrow":
-        udf = _arrow_flag_udf(stats, vocab_size)
+        udf = _arrow_array_flag_udf(stats, vocab_size)
         out = df.withColumn(
             "_flags",
             udf(
@@ -430,12 +370,6 @@ def mark(
                 F.col("n_tok").cast("double"),
             ),
         )
-        for i, f in enumerate(FLAG_COLS):
-            out = out.withColumn(f, F.shiftright("_flags", i).bitwiseAND(F.lit(1)))
-        out = out.drop("_flags")
-    elif engine == "arrow_deep":
-        udf = _arrow_deep_flag_udf(stats, vocab_size)
-        out = df.withColumn("_flags", udf("doc_id", "tokens", "n_tok"))
         for i, f in enumerate(FLAG_COLS):
             out = out.withColumn(f, F.shiftright("_flags", i).bitwiseAND(F.lit(1)))
         out = out.drop("_flags")

@@ -196,7 +196,15 @@ def pca_score_udf(model: PCAModel):
     ||(x-μ) - P Pᵀ (x-μ)||₂ — distance from the principal subspace.
     Rows that don't lie in the directions the corpus varies in score
     high; the reference's pluggable pyod PCA detector contract
-    (defaults.py:35-110) re-expressed as one Arrow matmul per batch."""
+    (defaults.py:35-110) re-expressed as one Arrow matmul per batch.
+
+    This is also the engine's stand-in for the reference's third pyod
+    scorer, the torch AutoEncoder
+    (pyod_modified/CustomAutoEncoder/torchCustomAE.py:292,382), which
+    scores rows by reconstruction error too: a linear autoencoder with
+    k hidden units trained to the squared-error optimum spans the same
+    top-k principal subspace, so this score is its linear special case.
+    There is no nonlinear variant (no torch in the engine)."""
     mu = np.asarray(model.mean, dtype=np.float64)
     comps = np.asarray(model.components, dtype=np.float64)
 

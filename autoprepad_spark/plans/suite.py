@@ -193,8 +193,9 @@ class ValidationSuite:
             allowed = sorted({r["source"] for r in d.select("source").collect()})
 
         # The plan's marking pass carries no token passthrough (the
-        # validator never emits tokens), so the arrow engine uses the
-        # queue-free mapInPandas variant — see mark_slim's docstring.
+        # validator never emits tokens), so the arrow engine uses
+        # mark_slim, which keeps tokens out of the Arrow UDF's input
+        # queue — see its docstring.
         if self.engine == "arrow":
             marked = mark_slim(
                 todo, stats, vocab_size=self.vocab_size, allowed_sources=allowed,

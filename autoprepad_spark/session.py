@@ -9,13 +9,27 @@ the parallelism level rather than the 200 default.
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
+import shutil
+import subprocess
+import sys
+import tempfile
+import zipimport
 
 import pandas as pd
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 #: bounds of the default driver heap, in MB
 _HEAP_MIN_MB, _HEAP_MAX_MB = 1024, 16 * 1024
+
+#: the local file system that sets permissions without a child process
+NIO_LOCAL_FS = "autoprepad_spark.jvm.NioLocalFileSystem"
+_NIO_LOCAL_FS_SRC = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "jvm", "NioLocalFileSystem.java"
+)
 
 
 def default_driver_mem() -> str:
@@ -33,6 +47,84 @@ def default_driver_mem() -> str:
     except (OSError, StopIteration):
         return f"{_HEAP_MAX_MB}m"
     return f"{max(_HEAP_MIN_MB, min(_HEAP_MAX_MB, kb // 2048))}m"
+
+
+def _hadoop_api_jars() -> list[str]:
+    """The Hadoop client API jars of the Spark install PySpark launches."""
+    import pyspark
+
+    for home in (os.environ.get("SPARK_HOME"), os.path.dirname(pyspark.__file__)):
+        jars = sorted(glob.glob(os.path.join(home or "", "jars", "hadoop-client-api-*.jar")))
+        if home and jars:
+            return jars
+    return []
+
+
+def nio_local_fs_classpath() -> str | None:
+    """Class directory of ``jvm/NioLocalFileSystem.java``, compiled once.
+
+    Without the native Hadoop library, Hadoop's local file system sets
+    the mode of every file it creates and every directory it makes by
+    running ``chmod`` in a child process: each parquet part file, its
+    .crc sidecar and each task attempt directory fork the JVM (~60 times
+    per suite call over a 32-partition table). The Java class sets the
+    same bits through java.nio instead. It is compiled with ``javac``
+    into the temp directory, keyed on its source, javac and the Hadoop
+    jars, so a later session reuses it; returns None when there is no
+    javac or no Hadoop jar, or the compile fails (the session then keeps
+    Hadoop's own local file system)."""
+    javac = shutil.which("javac")
+    jars = _hadoop_api_jars()
+    if javac is None or not jars:
+        return None
+    with open(_NIO_LOCAL_FS_SRC, "rb") as f:
+        key = hashlib.sha256(f.read())
+    key.update("\0".join([os.path.realpath(javac), *jars]).encode())
+    out = os.path.join(tempfile.gettempdir(), f"autoprepad_spark-jvm-{key.hexdigest()[:16]}")
+    if os.path.isdir(out):
+        return out
+    build = tempfile.mkdtemp(prefix="autoprepad_spark-jvm-build-")
+    try:
+        subprocess.run(
+            [javac, "--release", "17", "-nowarn", "-d", build,
+             "-cp", os.pathsep.join(jars), _NIO_LOCAL_FS_SRC],
+            check=True, capture_output=True, timeout=300,
+        )
+        os.rename(build, out)  # atomic: a concurrent session sees all or nothing
+    except (OSError, subprocess.SubprocessError):
+        shutil.rmtree(build, ignore_errors=True)
+    return out if os.path.isdir(out) else None
+
+
+def _keep_zip_directories(_self) -> None:
+    """``zipimporter.invalidate_caches`` for a process whose archives
+    never change: keep the cached central directory."""
+
+
+def freeze_worker_zip_caches() -> bool:
+    """Stop a Spark Python worker re-reading every zip directory per task.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` at the start
+    of every task (``worker_util.setup_spark_files``). On CPython < 3.13
+    that makes each ``zipimporter`` on the path re-read its archive's
+    whole central directory in pure Python: pyspark.zip once per
+    sub-package prefix, the py4j zip and the spark-core jar, 110-380 ms
+    per task on a 4-core host whatever the task's row count. The
+    archives on a worker's path never change during its life, so the
+    re-read is dropped; directory finders are still invalidated, and an
+    archive shipped later (``addPyFile``) is a new path entry with a
+    fresh importer, so new files stay importable. Python 3.13 only drops
+    the cache, and the driver is never patched.
+
+    Called on package import; returns whether the patch is in place."""
+    if sys.version_info >= (3, 13):
+        return False
+    from pyspark.core.files import SparkFiles
+
+    if not SparkFiles._is_running_on_worker:
+        return False
+    zipimport.zipimporter.invalidate_caches = _keep_zip_directories
+    return True
 
 
 def get_spark(
@@ -64,6 +156,21 @@ def get_spark(
     # it. PythonRunner exports PYSPARK_GATEWAY_PORT into the driver
     # process, so its presence == "launched via spark-submit".
     under_submit = "PYSPARK_GATEWAY_PORT" in os.environ
+
+    # The file-system class goes on the classpath of the JVM this call
+    # launches, so only a local master on a JVM not yet started gets it
+    # (executors of local-cluster[...] share the host, hence the executor
+    # classpath too). extra_conf can name another spark.hadoop.fs.file.impl.
+    local = master is None or master.startswith("local")
+    fs_conf = {}
+    if local and not under_submit and SparkContext._gateway is None:
+        classes = nio_local_fs_classpath()
+        if classes is not None:
+            fs_conf = {
+                "spark.driver.extraClassPath": classes,
+                "spark.executor.extraClassPath": classes,
+                "spark.hadoop.fs.file.impl": NIO_LOCAL_FS,
+            }
 
     builder = SparkSession.builder.appName(app_name)
     if master is not None:
@@ -102,11 +209,23 @@ def get_spark(
             os.environ.get("SPARK_JAVA_OPTS", "-XX:+UseParallelGC"),
         )
         .config("spark.ui.enabled", "false")
+        # PySpark 4's DataFrame debugging captures the Python call site
+        # (inspect.stack() plus py4j set/clear calls) on every Column op:
+        # a streaming validate batch's plan took ~1,940 py4j round trips
+        # to build with it and ~790 without. Errors keep their class
+        # and message without it; pass
+        # extra_conf={"spark.python.sql.dataFrameDebugging.enabled":
+        # "true"} to get the call-site fragment back.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # files.maxPartitionBytes default 128m is right for the 100TB target;
         # keep it explicit so the intent is visible.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
     )
+    for k, v in fs_conf.items():
+        builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():
+        if k.endswith("extraClassPath") and k in fs_conf:
+            v = os.pathsep.join([fs_conf[k], v])  # keep the file system loadable
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

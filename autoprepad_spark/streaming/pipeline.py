@@ -92,15 +92,16 @@ class ScoreStage:
             raise ValueError("threshold and alert_path must be set together")
 
 
-def _sink(df: DataFrame, path: str, batch_id: int) -> None:
-    """The pipeline-wide idempotent sink: dynamic partition overwrite
-    keyed on the ingest batch — a replayed batch replaces its own
-    partition (metadata-level), never duplicates."""
+def _sink(df: DataFrame, path: str, batch_id: int, batch_col: str = "ingest_batch") -> None:
+    """The streaming-wide idempotent sink: dynamic partition overwrite
+    keyed on the batch column — a replayed batch replaces its own
+    partition (metadata-level), never duplicates. The single-stage
+    faces in validate.py / score.py key it on ``batch_id``."""
     (
-        df.withColumn("ingest_batch", F.lit(batch_id))
+        df.withColumn(batch_col, F.lit(batch_id))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch")
+        .partitionBy(batch_col)
         .parquet(path)
     )
 

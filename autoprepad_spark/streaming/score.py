@@ -18,16 +18,18 @@ written to their own sink so downstream consumers tail a small table,
 not the full scored firehose.
 
 Restart safety: both sinks are hive-partitioned by ``batch_id`` and
-written with dynamic partition OVERWRITE (the
-stream_dedup_against_index pattern, validate.py) — a batch replayed
-after a crash between the write and the checkpoint commit overwrites
-its own partition instead of duplicating rows or re-firing alerts.
+written with dynamic partition OVERWRITE (the streaming-wide sink,
+pipeline._sink) — a batch replayed after a crash between the write and
+the checkpoint commit overwrites its own partition instead of
+duplicating rows or re-firing alerts.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
+
+from autoprepad_spark.streaming.pipeline import _sink
 
 
 def stream_score(
@@ -64,34 +66,21 @@ def stream_score(
         .parquet(input_path)
     )
 
-    def _write(df: DataFrame, path: str) -> None:
-        # dynamic partition overwrite on batch_id: a replayed batch
-        # replaces its own partition (metadata-level), never duplicates
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(path)
-        )
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         cols = batch_df.columns if keep_cols is None else keep_cols
-        out = batch_df.select(
-            *cols, score.alias("anomaly_score")
-        ).withColumn("batch_id", F.lit(batch_id))
+        out = batch_df.select(*cols, score.alias("anomaly_score"))
         if threshold is not None:
             # one cached pass feeds both sinks; the alert subset is
             # bounded by the threshold's fitted tail mass
             out = out.cache()
             try:
-                _write(out, scored_path)
-                _write(
-                    out.filter(F.col("anomaly_score") > threshold), alert_path
-                )
+                _sink(out, scored_path, batch_id, "batch_id")
+                _sink(out.filter(F.col("anomaly_score") > threshold),
+                      alert_path, batch_id, "batch_id")
             finally:
                 out.unpersist()
         else:
-            _write(out, scored_path)
+            _sink(out, scored_path, batch_id, "batch_id")
 
     writer = (
         reader.writeStream.foreachBatch(process_batch)

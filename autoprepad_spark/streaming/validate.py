@@ -13,12 +13,14 @@ Design:
   ``foreachBatch``. Each micro-batch applies TRAIN-FITTED stats (the
   reference's fit-then-predict split: pipelines/runs.py:139-198 applies
   train statistics to test data) through the same Arrow-UDF marking pass
-  as batch, appends violation rows and per-(batch, part) verdicts to
-  parquet sinks. ``Trigger.AvailableNow`` drains the backlog and stops —
+  as batch, and writes violation rows and per-(batch, part) verdicts to
+  parquet sinks partitioned by ``batch_id`` with dynamic partition
+  overwrite. ``Trigger.AvailableNow`` drains the backlog and stops —
   the scheduled-incremental-validation mode; omit it for continuous.
-  State: none (marking is a pure map) — restart safety comes entirely
-  from the checkpoint's file-source log, so a killed job resumes at the
-  last unfinished batch without duplicating sink rows.
+  State: none (marking is a pure map) — the checkpoint's file-source
+  log resumes a killed job at the last unfinished batch, and a batch
+  replayed after a crash (or a drain from a fresh checkpoint) replaces
+  its own ``batch_id`` partitions instead of duplicating sink rows.
 * ``stream_profile`` — pure streaming aggregation: event-time windowed
   per-source counts/null-rates with a watermark for late data. Uses
   native windowed aggs (partial+final, mergeable state store) — the
@@ -34,6 +36,7 @@ from autoprepad_spark.operators.profile import ProfileStats
 from autoprepad_spark.plans import verdicts as V
 from autoprepad_spark.plans.suite import ALL_CHECKS
 from autoprepad_spark.schema import TOKENS_SCHEMA
+from autoprepad_spark.streaming.pipeline import _sink
 
 
 def stream_validate(
@@ -81,13 +84,9 @@ def stream_validate(
             checks = [c for c in ALL_CHECKS if c != "unique_doc_id"]
             if dim is None:
                 checks = [c for c in checks if c != "ref_source"]
-            verd = V.assemble_verdicts(row_counts, viol, checks).withColumn(
-                "batch_id", F.lit(batch_id)
-            )
-            viol.withColumn("batch_id", F.lit(batch_id)).write.mode(
-                "append"
-            ).parquet(violation_path)
-            verd.write.mode("append").parquet(verdict_path)
+            verd = V.assemble_verdicts(row_counts, viol, checks)
+            _sink(viol, violation_path, batch_id, "batch_id")
+            _sink(verd, verdict_path, batch_id, "batch_id")
             viol.unpersist()
         finally:
             batch_df.unpersist()
@@ -118,10 +117,11 @@ def stream_drift(
     Each arriving batch's per-source n_tok histogram is compared against
     the CHECKPOINTED baseline profile (PSI + chi², the batch drift
     operator reused verbatim), and one drift row per (batch, source) is
-    appended — the streaming shape of the reference's
-    fit-on-train/compare-on-test split. The per-batch state is only the
-    |sources| x |buckets| histogram (mergeable hash agg), so batch size
-    doesn't change the memory footprint.
+    written to the ``batch_id`` partition of the drift sink (dynamic
+    overwrite: a replayed batch replaces its rows) — the streaming shape
+    of the reference's fit-on-train/compare-on-test split. The per-batch
+    state is only the |sources| x |buckets| histogram (mergeable hash
+    agg), so batch size doesn't change the memory footprint.
     """
     from autoprepad_spark.operators import drift as drift_mod
 
@@ -134,10 +134,7 @@ def stream_drift(
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         cur = drift_mod.ntok_histogram(batch_df, bucket_width=width)
-        out = drift_mod.drift(baseline_hist, cur).withColumn(
-            "batch_id", F.lit(batch_id)
-        )
-        out.write.mode("append").parquet(drift_path)
+        _sink(drift_mod.drift(baseline_hist, cur), drift_path, batch_id, "batch_id")
 
     writer = (
         reader.writeStream.foreachBatch(process_batch)
@@ -359,15 +356,6 @@ def stream_dedup_against_index(
             T.StructField("sig", T.ArrayType(T.LongType())),
         ]
     )
-
-    def _sink(df: DataFrame, path: str, batch_id: int) -> None:
-        (
-            df.withColumn("ingest_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_batch")
-            .parquet(path)
-        )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if any(

@@ -208,3 +208,39 @@ def test_validate_only_pipeline_matches_stream_validate(spark, tmp_path, stats):
     b = sorted(tuple(str(v) for v in r) for r in spark.read.parquet(
         str(tmp_path / "v2")).drop("batch_id").collect())
     assert a == b
+
+
+def test_single_stage_faces_replay_without_duplicates(spark, tmp_path, stats):
+    """stream_validate and stream_drift write their sinks like the
+    pipeline: a full replay (wiped checkpoint, same files) leaves every
+    sink row-for-row identical instead of appending a second copy."""
+    from autoprepad_spark.datagen import generate_tokens
+    from autoprepad_spark.operators.drift import ntok_histogram
+    from autoprepad_spark.streaming.validate import stream_drift, stream_validate
+
+    p = {k: str(tmp_path / k) for k in ("inp", "ck_v", "ck_d", "verd", "viol", "drift")}
+    for seed in (31, 32):  # two files -> two batches at one file per trigger
+        generate_tokens(spark, 2_000, seed=seed, n_parts=2).coalesce(1).write.mode(
+            "append").parquet(p["inp"])
+    baseline = ntok_histogram(generate_tokens(spark, 2_000, seed=30, n_parts=2))
+
+    def drain():
+        stream_validate(spark, p["inp"], stats=stats, checkpoint_dir=p["ck_v"],
+                        verdict_path=p["verd"], violation_path=p["viol"],
+                        max_files_per_trigger=1).awaitTermination(120)
+        stream_drift(spark, p["inp"], baseline_hist=baseline, checkpoint_dir=p["ck_d"],
+                     drift_path=p["drift"], max_files_per_trigger=1).awaitTermination(120)
+
+    def snapshot():
+        return {k: sorted(tuple(str(v) for v in r)
+                          for r in spark.read.parquet(p[k]).collect())
+                for k in ("verd", "viol", "drift")}
+
+    drain()
+    before = snapshot()
+    for k in ("verd", "viol", "drift"):
+        assert {r["batch_id"] for r in spark.read.parquet(p[k]).collect()} == {0, 1}
+    shutil.rmtree(p["ck_v"])
+    shutil.rmtree(p["ck_d"])
+    drain()
+    assert snapshot() == before
