@@ -71,6 +71,19 @@ ALL_CHECKS = ROW_CHECKS + ["unique_doc_id", "ref_source"]
 ROW_COUNT_MARK = "__row_count__"
 
 
+def allowed_sources(dim: DataFrame) -> list[str]:
+    """The referential check's allowed set: the dimension's sources
+    (only the ``active`` ones when it has that column), sorted.
+
+    The dimension side must fit executor memory to be broadcastable at
+    all, so it is collected once and the check rides the marking pass
+    as a literal isin flag. De-duplicated on the driver: a distinct
+    would add a shuffle job for a table this small."""
+    if "active" in dim.columns:
+        dim = dim.filter(F.col("active"))
+    return sorted({r["source"] for r in dim.select("source").collect()})
+
+
 def read_violations(spark, path: str) -> DataFrame:
     """Read a violation sink written by ValidationSuite.run(violation_sink=...).
 
@@ -180,17 +193,11 @@ class ValidationSuite:
             raise ValueError(f"unknown checks: {sorted(unknown)}")
         custom = [c for c in custom if c.name in selected]
 
-        # Referential check: the dimension side must fit executor memory
-        # to be broadcastable at all, so collect it once and inline the
-        # check into the marking pass as a literal isin flag — no second
-        # fact-table scan, no anti-join. (De-duplicated on the driver: a
-        # distinct would add a shuffle job for a table this small.)
+        # Referential check: inlined into the marking pass as a literal
+        # isin flag — no second fact-table scan, no anti-join.
         allowed = None
         if dim is not None and "ref_source" in selected:
-            d = dim
-            if "active" in dim.columns:
-                d = d.filter(F.col("active"))
-            allowed = sorted({r["source"] for r in d.select("source").collect()})
+            allowed = allowed_sources(dim)
 
         # The plan's marking pass carries no token passthrough (the
         # validator never emits tokens), so the arrow engine uses

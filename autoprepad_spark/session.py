@@ -27,6 +27,8 @@ _HEAP_MIN_MB, _HEAP_MAX_MB = 1024, 16 * 1024
 
 #: the local file system that sets permissions without a child process
 NIO_LOCAL_FS = "autoprepad_spark.jvm.NioLocalFileSystem"
+#: the same for Hadoop's FileContext API (streaming checkpoint logs)
+NIO_LOCAL_AFS = NIO_LOCAL_FS + "$Fs"
 _NIO_LOCAL_FS_SRC = os.path.join(
     os.path.dirname(os.path.abspath(__file__)), "jvm", "NioLocalFileSystem.java"
 )
@@ -67,12 +69,15 @@ def nio_local_fs_classpath() -> str | None:
     the mode of every file it creates and every directory it makes by
     running ``chmod`` in a child process: each parquet part file, its
     .crc sidecar and each task attempt directory fork the JVM (~60 times
-    per suite call over a 32-partition table). The Java class sets the
-    same bits through java.nio instead. It is compiled with ``javac``
-    into the temp directory, keyed on its source, javac and the Hadoop
-    jars, so a later session reuses it; returns None when there is no
-    javac or no Hadoop jar, or the compile fails (the session then keeps
-    Hadoop's own local file system)."""
+    per suite call over a 32-partition table), and so does each file of
+    a streaming checkpoint commit, written through Hadoop's FileContext
+    API (6 per trigger: a file and a .crc each for the source, offset
+    and commit logs). The Java classes, one per API, set the same bits
+    through java.nio instead. They are compiled with ``javac`` into the
+    temp directory, keyed on their source, javac and the Hadoop jars, so
+    a later session reuses them; returns None when there is no javac or
+    no Hadoop jar, or the compile fails (the session then keeps Hadoop's
+    own local file systems)."""
     javac = shutil.which("javac")
     jars = _hadoop_api_jars()
     if javac is None or not jars:
@@ -160,7 +165,8 @@ def get_spark(
     # The file-system class goes on the classpath of the JVM this call
     # launches, so only a local master on a JVM not yet started gets it
     # (executors of local-cluster[...] share the host, hence the executor
-    # classpath too). extra_conf can name another spark.hadoop.fs.file.impl.
+    # classpath too). extra_conf can name another spark.hadoop.fs.file.impl
+    # or spark.hadoop.fs.AbstractFileSystem.file.impl.
     local = master is None or master.startswith("local")
     fs_conf = {}
     if local and not under_submit and SparkContext._gateway is None:
@@ -170,6 +176,7 @@ def get_spark(
                 "spark.driver.extraClassPath": classes,
                 "spark.executor.extraClassPath": classes,
                 "spark.hadoop.fs.file.impl": NIO_LOCAL_FS,
+                "spark.hadoop.fs.AbstractFileSystem.file.impl": NIO_LOCAL_AFS,
             }
 
     builder = SparkSession.builder.appName(app_name)

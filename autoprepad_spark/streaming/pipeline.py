@@ -21,11 +21,24 @@ the shared scan). ``stream_pipeline`` runs the composition inside one
   written with dynamic partition OVERWRITE, so a batch replayed after
   a crash between any sink write and the checkpoint commit overwrites
   its own partitions across the WHOLE composed output instead of
-  duplicating any of them (the property the replay test drives).
+  duplicating any of them (the property the replay test drives);
+* the validate and score stages, and within them the violations and
+  verdicts sinks and the scored and alerts sinks, are written
+  CONCURRENTLY (``_concurrently``). A small file's batch makes every
+  write a one-task job, so one after another they would leave all but
+  one core idle. It is safe because no sink reads another's output:
+  verdicts read the cached violations frame, alerts the cached scored
+  frame, and both stages the cached batch. A cache is unpersisted
+  only after every write that reads it has returned; two jobs that
+  race for one cached partition compute it once (the block manager's
+  write lock), and the sink jobs inherit the query's job group, so
+  ``query.stop()`` still cancels them. Dedup's writes stay sequential.
 
 Stages are opt-in: pass any subset of DedupStage / ValidateStage /
 ScoreStage. A single-stage pipeline is exactly the corresponding
-standalone face with the hardened sink convention.
+standalone face with the hardened sink convention, and
+``stream_validate`` / ``stream_score`` run this module's stage bodies
+(keyed on ``batch_id``).
 
 Scale shape: unchanged from the standalone faces — dedup exchanges
 O(|batch|) signature rows against a partition-pruned index, marking is
@@ -35,14 +48,16 @@ them adds zero extra passes over the batch beyond the one cache.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
+from pyspark import InheritableThread
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
 
 from autoprepad_spark.operators.marking import mark_slim
 from autoprepad_spark.operators.profile import ProfileStats
 from autoprepad_spark.plans import verdicts as V
-from autoprepad_spark.plans.suite import ALL_CHECKS
+from autoprepad_spark.plans.suite import ALL_CHECKS, allowed_sources
 from autoprepad_spark.sources.tables import list_names
 
 
@@ -181,11 +196,44 @@ def _dedup_batch(
         uniq.unpersist()
 
 
+def _concurrently(*thunks: Callable[[], None]) -> None:
+    """Run independent writes at the same time: the first thunk on this
+    thread, the others on ``InheritableThread``s.
+
+    A small batch's write is a one-task job, so one after another they
+    leave all but one core idle. The threads copy this thread's Spark
+    local properties, so their jobs carry the streaming query's job
+    group (``query.stop()`` cancels writes still in flight) and the
+    micro-batch's SQL execution id. Every thread is joined before the
+    first error (in thunk order) is re-raised, so no write is still
+    running when the caller unpersists what the writes read."""
+    errors: list[BaseException | None] = [None] * len(thunks)
+
+    def run(i: int) -> None:
+        try:
+            thunks[i]()
+        except BaseException as e:  # re-raised on the calling thread
+            errors[i] = e
+
+    threads = [InheritableThread(run, args=(i,)) for i in range(1, len(thunks))]
+    for t in threads:
+        t.start()
+    try:
+        thunks[0]()
+    finally:
+        for t in threads:
+            t.join()
+    for e in errors:
+        if e is not None:
+            raise e
+
+
 def _validate_batch(
     cfg: ValidateStage,
     allowed: list[str] | None,
     df: DataFrame,
     batch_id: int,
+    batch_col: str = "ingest_batch",
 ) -> None:
     kwargs = {} if cfg.vocab_size is None else {"vocab_size": cfg.vocab_size}
     marked = mark_slim(df, cfg.stats, allowed_sources=allowed, **kwargs)
@@ -197,25 +245,33 @@ def _validate_batch(
         if cfg.dim is None:
             checks = [c for c in checks if c != "ref_source"]
         verd = V.assemble_verdicts(row_counts, viol, checks)
-        _sink(viol, cfg.violation_path, batch_id)
-        _sink(verd, cfg.verdict_path, batch_id)
+        _concurrently(
+            lambda: _sink(viol, cfg.violation_path, batch_id, batch_col),
+            lambda: _sink(verd, cfg.verdict_path, batch_id, batch_col),
+        )
     finally:
         viol.unpersist()
 
 
-def _score_batch(cfg: ScoreStage, df: DataFrame, batch_id: int) -> None:
+def _score_batch(
+    cfg: ScoreStage, df: DataFrame, batch_id: int, batch_col: str = "ingest_batch"
+) -> None:
     cols = df.columns if cfg.keep_cols is None else cfg.keep_cols
     out = df.select(*cols, cfg.score.alias("anomaly_score"))
     if cfg.threshold is not None:
+        # one cached pass feeds both sinks; the alert subset is bounded
+        # by the threshold's fitted tail mass
         out = out.cache()
         try:
-            _sink(out, cfg.scored_path, batch_id)
-            _sink(out.filter(F.col("anomaly_score") > cfg.threshold),
-                  cfg.alert_path, batch_id)
+            _concurrently(
+                lambda: _sink(out, cfg.scored_path, batch_id, batch_col),
+                lambda: _sink(out.filter(F.col("anomaly_score") > cfg.threshold),
+                              cfg.alert_path, batch_id, batch_col),
+            )
         finally:
             out.unpersist()
     else:
-        _sink(out, cfg.scored_path, batch_id)
+        _sink(out, cfg.scored_path, batch_id, batch_col)
 
 
 def stream_pipeline(
@@ -253,17 +309,16 @@ def stream_pipeline(
 
     allowed = None
     if validate is not None and validate.dim is not None:
-        d = validate.dim
-        if "active" in d.columns:
-            d = d.filter(F.col("active"))
-        allowed = sorted(
-            r["source"] for r in d.select("source").distinct().collect())
+        allowed = allowed_sources(validate.dim)
 
     def tail_stages(df: DataFrame, batch_id: int) -> None:
+        stages = []
         if validate is not None:
-            _validate_batch(validate, allowed, df, batch_id)
+            stages.append(lambda: _validate_batch(validate, allowed, df, batch_id))
         if score is not None:
-            _score_batch(score, df, batch_id)
+            stages.append(lambda: _score_batch(score, df, batch_id))
+        if stages:
+            _concurrently(*stages)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.cache()

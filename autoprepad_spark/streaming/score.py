@@ -17,6 +17,10 @@ is the source-file checkpoint. Alerts are the thresholded subset
 written to their own sink so downstream consumers tail a small table,
 not the full scored firehose.
 
+The batch body is ``stream_pipeline``'s score stage
+(``pipeline._score_batch``): the scored and alert sinks are written
+concurrently from one cached projection.
+
 Restart safety: both sinks are hive-partitioned by ``batch_id`` and
 written with dynamic partition OVERWRITE (the streaming-wide sink,
 pipeline._sink) — a batch replayed after a crash between the write and
@@ -26,10 +30,10 @@ duplicating rows or re-firing alerts.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from autoprepad_spark.streaming.pipeline import _sink
+from autoprepad_spark.streaming.pipeline import ScoreStage, _score_batch
 
 
 def stream_score(
@@ -58,8 +62,7 @@ def stream_score(
     keep_cols: projection for both sinks (defaults to all columns);
     `anomaly_score` and `batch_id` are appended to it.
     """
-    if (threshold is None) != (alert_path is None):
-        raise ValueError("threshold and alert_path must be set together")
+    stage = ScoreStage(score, scored_path, alert_path, threshold, keep_cols)
     reader = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger or 1000)
@@ -67,20 +70,7 @@ def stream_score(
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        cols = batch_df.columns if keep_cols is None else keep_cols
-        out = batch_df.select(*cols, score.alias("anomaly_score"))
-        if threshold is not None:
-            # one cached pass feeds both sinks; the alert subset is
-            # bounded by the threshold's fitted tail mass
-            out = out.cache()
-            try:
-                _sink(out, scored_path, batch_id, "batch_id")
-                _sink(out.filter(F.col("anomaly_score") > threshold),
-                      alert_path, batch_id, "batch_id")
-            finally:
-                out.unpersist()
-        else:
-            _sink(out, scored_path, batch_id, "batch_id")
+        _score_batch(stage, batch_df, batch_id, "batch_id")
 
     writer = (
         reader.writeStream.foreachBatch(process_batch)

@@ -15,7 +15,9 @@ Design:
   train statistics to test data) through the same Arrow-UDF marking pass
   as batch, and writes violation rows and per-(batch, part) verdicts to
   parquet sinks partitioned by ``batch_id`` with dynamic partition
-  overwrite. ``Trigger.AvailableNow`` drains the backlog and stops —
+  overwrite. The batch body is ``stream_pipeline``'s validate stage
+  (``pipeline._validate_batch``), so the two sinks are written
+  concurrently. ``Trigger.AvailableNow`` drains the backlog and stops —
   the scheduled-incremental-validation mode; omit it for continuous.
   State: none (marking is a pure map) — the checkpoint's file-source
   log resumes a killed job at the last unfinished batch, and a batch
@@ -31,12 +33,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from autoprepad_spark.operators.marking import mark_slim
 from autoprepad_spark.operators.profile import ProfileStats
-from autoprepad_spark.plans import verdicts as V
-from autoprepad_spark.plans.suite import ALL_CHECKS
+from autoprepad_spark.plans.suite import allowed_sources
 from autoprepad_spark.schema import TOKENS_SCHEMA
-from autoprepad_spark.streaming.pipeline import _sink
+from autoprepad_spark.streaming.pipeline import ValidateStage, _sink, _validate_batch
 
 
 def stream_validate(
@@ -63,31 +63,13 @@ def stream_validate(
         .parquet(input_path)
     )
 
-    kwargs = {} if vocab_size is None else {"vocab_size": vocab_size}
-    # collect the (tiny, broadcastable-by-contract) dimension once so the
-    # referential check rides the marking pass per batch, same as batch
-    allowed = None
-    if dim is not None:
-        d = dim
-        if "active" in dim.columns:
-            d = d.filter(F.col("active"))
-        allowed = sorted(r["source"] for r in d.select("source").distinct().collect())
+    stage = ValidateStage(stats, verdict_path, violation_path, dim, vocab_size)
+    allowed = None if dim is None else allowed_sources(dim)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.cache()
         try:
-            marked = mark_slim(batch_df, stats, allowed_sources=allowed, **kwargs)
-            viol = V.explode_violations(marked).cache()
-            row_counts = batch_df.groupBy("part").agg(
-                F.count(F.lit(1)).alias("row_count")
-            )
-            checks = [c for c in ALL_CHECKS if c != "unique_doc_id"]
-            if dim is None:
-                checks = [c for c in checks if c != "ref_source"]
-            verd = V.assemble_verdicts(row_counts, viol, checks)
-            _sink(viol, violation_path, batch_id, "batch_id")
-            _sink(verd, verdict_path, batch_id, "batch_id")
-            viol.unpersist()
+            _validate_batch(stage, allowed, batch_df, batch_id, "batch_id")
         finally:
             batch_df.unpersist()
 

@@ -5,7 +5,13 @@ from autoprepad_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("autoprepad-tests", cores=8, shuffle_partitions=8)
+    # Tests read stage data back from the status store (operation graphs
+    # in test_suite_jobs, stage metrics in test_stream_pipeline). Past
+    # spark.ui.retainedStages (1000) stages the store evicts in batches
+    # of 100, skipped stages first, so whether a job's skipped stages
+    # are still there would depend on how many stages earlier tests ran.
+    s = get_spark("autoprepad-tests", cores=8, shuffle_partitions=8,
+                  extra_conf={"spark.ui.retainedStages": "100000"})
     yield s
 
 

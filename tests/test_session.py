@@ -59,7 +59,7 @@ def test_local_files_keep_hadoop_modes(spark, tmp_path):
 
 
 def test_local_writes_start_no_chmod_process(tmp_path):
-    from autoprepad_spark.session import nio_local_fs_classpath
+    from autoprepad_spark.session import NIO_LOCAL_AFS, nio_local_fs_classpath
 
     if nio_local_fs_classpath() is None:
         pytest.skip("no javac or Hadoop jar: the session keeps Hadoop's local file system")
@@ -76,16 +76,36 @@ def test_local_writes_start_no_chmod_process(tmp_path):
         "from autoprepad_spark.session import get_spark\n"
         f"s = get_spark('no-chmod', cores=2, extra_conf={{"
         f"'spark.driver.extraClassPath': {str(extra)!r}}})\n"
-        f"log = {str(log)!r}\n"
+        f"log, d = {str(log)!r}, {str(tmp_path)!r}\n"
         "n = lambda: len(open(log).readlines()) if os.path.exists(log) else 0\n"
-        f"s.range(20).write.parquet({str(tmp_path / 'a')!r})\n"
+        "s.range(20).write.parquet(d + '/a')\n"
         "print('SPARK', n())\n"
+        # the checkpoint's metadata, offset, source and commit logs go
+        # through Hadoop's FileContext API
+        "q = (s.readStream.schema('id long').parquet(d + '/a').writeStream.format('noop')\n"
+        "     .option('checkpointLocation', d + '/ck').trigger(availableNow=True).start())\n"
+        "q.awaitTermination()\n"
+        "print('STREAM', n(), os.path.exists(d + '/ck/commits/0'))\n"
         "jvm = s.sparkContext._jvm\n"
+        "H = jvm.org.apache.hadoop\n"
+        "def fc_create(impl, name):\n"
+        "    conf = H.conf.Configuration(s.sparkContext._jsc.hadoopConfiguration())\n"
+        "    if impl:\n"
+        "        conf.set('fs.AbstractFileSystem.file.impl', impl)\n"
+        "    fc = H.fs.FileContext.getFileContext(conf)\n"
+        "    print('AFS', fc.getDefaultFileSystem().getClass().getName())\n"
+        "    opts = s.sparkContext._gateway.new_array(H.fs.Options.CreateOpts, 0)\n"
+        "    flags = jvm.java.util.EnumSet.of(H.fs.CreateFlag.CREATE)\n"
+        "    fc.create(H.fs.Path(d + '/' + name), flags, opts).close()\n"
+        "fc_create(None, 'fc')\n"
+        "print('FC', n())\n"
+        "fc_create('org.apache.hadoop.fs.local.LocalFs', 'hadoop-fc')\n"
+        "print('HADOOP_FC', n())\n"
         "conf = jvm.org.apache.hadoop.conf.Configuration(s.sparkContext._jsc.hadoopConfiguration())\n"
         "conf.set('fs.file.impl', 'org.apache.hadoop.fs.LocalFileSystem')\n"
         "conf.set('fs.file.impl.disable.cache', 'true')\n"
         "fs = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI('file:///'), conf)\n"
-        f"fs.create(jvm.org.apache.hadoop.fs.Path({str(tmp_path / 'b')!r})).close()\n"
+        "fs.create(jvm.org.apache.hadoop.fs.Path(d + '/b')).close()\n"
         "print('HADOOP', n())\n"
         "print('CP', s.sparkContext.getConf().get('spark.driver.extraClassPath'))\n"
         "s.stop()\n"
@@ -95,8 +115,16 @@ def test_local_writes_start_no_chmod_process(tmp_path):
     p = subprocess.run([sys.executable, "-c", code], capture_output=True, text=True,
                        env=env, cwd=REPO, timeout=300)
     lines = p.stdout.splitlines()
-    assert "SPARK 0" in lines, p.stderr[-2000:]
-    # the shim sees Hadoop's own local file system shell out for the mode
-    assert any(ln.startswith("HADOOP ") and int(ln.split()[1]) > 0 for ln in lines), lines
+    counts = {ln.split()[0]: int(ln.split()[1]) for ln in lines
+              if ln.split()[0] in ("SPARK", "STREAM", "FC", "HADOOP_FC", "HADOOP")}
+    assert counts.get("SPARK") == 0, p.stderr[-2000:]
+    assert "STREAM 0 True" in lines, lines  # a committed trigger, no chmod
+    assert f"AFS {NIO_LOCAL_AFS}" in lines, lines
+    assert counts["FC"] == 0, lines
+    # the shim sees Hadoop's own local file systems shell out for the mode
+    assert counts["HADOOP_FC"] > counts["FC"], lines
+    assert counts["HADOOP"] > counts["HADOOP_FC"], lines
+    assert (tmp_path / ".fc.crc").exists()  # FileContext writes stay checksummed
+    assert stat.S_IMODE(os.stat(tmp_path / "fc").st_mode) == 0o644
     cp = next(ln for ln in lines if ln.startswith("CP ")).split()[1].split(os.pathsep)
     assert cp[0] == nio_local_fs_classpath() and cp[1] == str(extra)

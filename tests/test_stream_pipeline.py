@@ -7,12 +7,17 @@ checkpoint, same files) leaves EVERY composed sink — kept, dropped,
 index, verdicts, violations, scored, alerts — row-for-row identical
 (dynamic partition overwrite across the whole pipeline); (3) a restart
 with the checkpoint intact is a no-op until new files arrive, and then
-processes only them.
+processes only them. It also pins the concurrent sink writes: they
+overlap, stay in the query's job group and scan the batch once, and a
+failing stage surfaces only after its sibling writes have returned.
 """
 
 from __future__ import annotations
 
+import glob
+import os
 import shutil
+import time
 
 import numpy as np
 import pytest
@@ -244,3 +249,130 @@ def test_single_stage_faces_replay_without_duplicates(spark, tmp_path, stats):
     shutil.rmtree(p["ck_d"])
     drain()
     assert snapshot() == before
+
+
+def _jobs(spark, skip=frozenset()):
+    """Jobs in the status store whose ids are not in ``skip``."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
+    return [j for j in (jobs.apply(i) for i in range(jobs.length()))
+            if j.jobId() not in skip]
+
+
+def _stages_of(spark, job):
+    from py4j.protocol import Py4JJavaError
+
+    store = spark.sparkContext._jsc.sc().statusStore()
+    ids = job.stageIds()
+    out = []
+    for i in range(ids.length()):
+        try:
+            out.append(store.lastStageAttempt(ids.apply(i)))
+        except Py4JJavaError:  # a skipped stage is never stored
+            pass
+    return out
+
+
+def _validate_score(stats, p, score=None):
+    return dict(
+        validate=ValidateStage(stats=stats, verdict_path=p["verd"],
+                               violation_path=p["viol"]),
+        score=ScoreStage(score=F.col("n_tok").cast("double") if score is None else score,
+                         scored_path=p["scored"], alert_path=p["alerts"],
+                         threshold=60.0, keep_cols=["part", "doc_id", "n_tok"]),
+    )
+
+
+def test_trigger_writes_sinks_concurrently(spark, tmp_path, stats):
+    """A trigger's four sink writes run at the same time, inside the
+    query's job group, and share one scan of the batch file."""
+    from autoprepad_spark.datagen import generate_tokens
+    from autoprepad_spark.schema import TOKENS_SCHEMA
+
+    p = {k: str(tmp_path / k) for k in
+         ("inp", "stage", "ck", "verd", "viol", "scored", "alerts")}
+    rows = 2_000
+    os.makedirs(p["inp"])
+    q = stream_pipeline(
+        spark, p["inp"], schema=TOKENS_SCHEMA, checkpoint_dir=p["ck"],
+        available_now=False, max_files_per_trigger=1, **_validate_score(stats, p),
+    )
+    try:
+        for i in range(2):  # the first trigger warms the query up
+            out = os.path.join(p["stage"], str(i))
+            generate_tokens(spark, rows, seed=40 + i, n_parts=2).coalesce(1).write.parquet(out)
+            (f,) = glob.glob(os.path.join(out, "*.parquet"))
+            seen = {j.jobId() for j in _jobs(spark)}
+            os.rename(f, os.path.join(p["inp"], f"f{i}.parquet"))
+            q.processAllAvailable()
+        jobs = _jobs(spark, seen)
+        group = str(q.runId)
+    finally:
+        q.stop()
+
+    assert jobs
+    # every job the trigger ran inherited the query's job group
+    assert all(j.jobGroup().isDefined() and j.jobGroup().get() == group for j in jobs)
+    writes = [(j.submissionTime().get().getTime(), j.completionTime().get().getTime())
+              for j in jobs if any(s.outputBytes() > 0 for s in _stages_of(spark, j))]
+    assert len(writes) == 4
+    assert any(a0 < b1 and b0 < a1
+               for i, (a0, a1) in enumerate(writes) for b0, b1 in writes[i + 1:]), writes
+    # one stage scans the file; every other reads the caches
+    scans = [s for j in jobs for s in _stages_of(spark, j) if s.inputRecords() == rows]
+    assert len(scans) == 1
+
+
+def test_failed_stage_waits_for_siblings_and_replays(spark, tmp_path, stats):
+    """A stage that raises fails the trigger only after its sibling
+    writes have returned, commits nothing, and a restart replays the
+    batch into exactly one copy per sink."""
+    from pyspark.errors import StreamingQueryException
+
+    from autoprepad_spark.datagen import generate_tokens
+    from autoprepad_spark.schema import TOKENS_SCHEMA
+    from autoprepad_spark.streaming.pipeline import _concurrently
+
+    # the helper itself: a fast failure surfaces after a slow sibling
+    done = []
+
+    def fail():
+        raise RuntimeError("first")
+
+    def slow():
+        time.sleep(0.5)
+        done.append(1)
+
+    with pytest.raises(RuntimeError, match="first"):
+        _concurrently(fail, slow)
+    assert done == [1]
+
+    p = {k: str(tmp_path / k) for k in ("inp", "ck", "verd", "viol", "scored", "alerts")}
+    rows = 2_000
+    generate_tokens(spark, rows, seed=44, n_parts=2).coalesce(1).write.parquet(p["inp"])
+    boom = F.raise_error(F.lit("score stage failed")).cast("double")
+    q = stream_pipeline(spark, p["inp"], schema=TOKENS_SCHEMA, checkpoint_dir=p["ck"],
+                        **_validate_score(stats, p, score=boom))
+    with pytest.raises(StreamingQueryException, match="score stage failed"):
+        q.awaitTermination(180)
+    assert not os.path.exists(os.path.join(p["ck"], "commits", "0"))
+    # the sibling validate stage's writes finished, nothing is in flight
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+    first = {k: sorted(tuple(str(v) for v in r) for r in spark.read.parquet(p[k]).collect())
+             for k in ("verd", "viol")}
+    assert first["verd"] and first["viol"]
+
+    q = stream_pipeline(spark, p["inp"], schema=TOKENS_SCHEMA, checkpoint_dir=p["ck"],
+                        **_validate_score(stats, p))
+    q.awaitTermination(180)
+    assert os.path.exists(os.path.join(p["ck"], "commits", "0"))
+    sink = {k: spark.read.parquet(p[k]) for k in ("verd", "viol", "scored", "alerts")}
+    for k, df in sink.items():
+        assert {r[0] for r in df.select("ingest_batch").distinct().collect()} == {0}, k
+    scored = sink["scored"]
+    assert scored.count() == rows
+    assert sink["alerts"].count() == scored.filter("anomaly_score > 60").count() > 0
+    # the replay overwrote the failed attempt's validate output
+    for k in ("verd", "viol"):
+        assert sorted(tuple(str(v) for v in r) for r in sink[k].collect()) == first[k], k
