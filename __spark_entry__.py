@@ -11,6 +11,7 @@ oracle_sql()   — DuckDB-equivalent SQL per query (same column names,
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
@@ -29,8 +30,9 @@ from autoprepad_spark.operators.uniqueness import duplicate_keys
 
 
 #: scratch dir for queries that must persist intermediate tables so the
-#: DuckDB oracle can read the SAME rows (gitignored; recreated per run)
-SCRATCH = "/root/repo/.scratch"
+#: DuckDB oracle can read the SAME rows (gitignored; recreated per run),
+#: inside the checkout this file sits in
+SCRATCH = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".scratch")
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -1522,15 +1524,16 @@ def q_hash_split(spark, sf):
 
 
 def q_stream_drift(spark, sf):
-    """Streaming drift monitor (foreachBatch PSI vs a checkpointed
-    baseline). With ONE availableNow micro-batch the per-batch PSI
+    """Streaming drift monitor (a DriftStage: per-batch PSI vs a
+    checkpointed baseline). With ONE availableNow micro-batch the per-batch PSI
     equals the batch drift of current-vs-baseline, so DuckDB recomputes
     it from the same two persisted parquet dirs — the streaming operator
     gets a real value oracle, not just a row count."""
     import tempfile
 
     from autoprepad_spark.datagen import generate_tokens
-    from autoprepad_spark.streaming.validate import stream_drift
+    from autoprepad_spark.schema import TOKENS_SCHEMA
+    from autoprepad_spark.streaming.pipeline import DriftStage, stream_pipeline
 
     base_path = f"{SCRATCH}/stream_drift_base"
     cur_path = f"{SCRATCH}/stream_drift_cur"
@@ -1545,10 +1548,10 @@ def q_stream_drift(spark, sf):
         spark.read.parquet(base_path), bucket_width=64
     )
     tmp = tempfile.mkdtemp(prefix="apad_sdrift_")
-    q = stream_drift(
-        spark, cur_path, baseline_hist=baseline_hist,
-        checkpoint_dir=f"{tmp}/ckpt", drift_path=f"{tmp}/out",
-        bucket_width=64, available_now=True, max_files_per_trigger=100_000,
+    q = stream_pipeline(
+        spark, cur_path, schema=TOKENS_SCHEMA, checkpoint_dir=f"{tmp}/ckpt",
+        drift=DriftStage(baseline_hist, f"{tmp}/out", bucket_width=64),
+        max_files_per_trigger=100_000,
     )
     q.awaitTermination()
     return (
@@ -1603,8 +1606,8 @@ def q_stream_running_totals(spark, sf):
 
 
 def q_stream_validate(spark, sf):
-    """Incremental streaming validator (foreachBatch marking with
-    train-fitted stats). One availableNow batch over a persisted token
+    """Incremental streaming validator (a ValidateStage: per-batch
+    marking with train-fitted stats). One availableNow batch over a persisted token
     table ⇒ the emitted per-(part, check) verdicts equal the batch
     validator's (minus the per-batch-undecidable uniqueness check), so
     DuckDB re-derives them from the same parquet."""
@@ -1612,7 +1615,8 @@ def q_stream_validate(spark, sf):
 
     from autoprepad_spark.datagen import generate_tokens, source_dim
     from autoprepad_spark.operators.profile import global_stats
-    from autoprepad_spark.streaming.validate import stream_validate
+    from autoprepad_spark.schema import TOKENS_SCHEMA
+    from autoprepad_spark.streaming.pipeline import ValidateStage, stream_pipeline
 
     src = f"{SCRATCH}/stream_validate_input"
     generate_tokens(spark, 20_000, seed=23, n_parts=4).write.mode(
@@ -1621,10 +1625,10 @@ def q_stream_validate(spark, sf):
     df = spark.read.parquet(src)
     stats = global_stats(df)
     tmp = tempfile.mkdtemp(prefix="apad_sv_")
-    q = stream_validate(
-        spark, src, stats=stats, checkpoint_dir=f"{tmp}/ckpt",
-        verdict_path=f"{tmp}/verd", violation_path=f"{tmp}/viol",
-        dim=source_dim(spark), available_now=True,
+    q = stream_pipeline(
+        spark, src, schema=TOKENS_SCHEMA, checkpoint_dir=f"{tmp}/ckpt",
+        validate=ValidateStage(stats, f"{tmp}/verd", f"{tmp}/viol",
+                               dim=source_dim(spark)),
         max_files_per_trigger=100_000,
     )
     q.awaitTermination()

@@ -18,7 +18,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from autoprepad_spark.schema import TOKENS_SCHEMA, SOURCE_DIM_SCHEMA
 
@@ -147,9 +147,3 @@ def write_tokens(df: DataFrame, path: str) -> None:
     """Persist partitioned by `part` — the sandbox stand-in for an Iceberg
     identity-partitioned table; partition pruning works the same way."""
     df.write.mode("overwrite").partitionBy("part").parquet(path)
-
-
-def read_tokens(spark: SparkSession, path: str) -> DataFrame:
-    df = spark.read.parquet(path)
-    # partition dirs read back as strings; keep declared column order
-    return df.select("doc_id", "tokens", "n_tok", "source", F.col("part").cast("string"))

@@ -27,9 +27,3 @@ def l2_norm(a: Column | str) -> Column:
 
 def cosine(a: Column | str, b: Column | str) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
-def l2_normalize(a: Column | str) -> Column:
-    a = F.col(a) if isinstance(a, str) else a
-    n = l2_norm(a)
-    return F.transform(a, lambda x: x.cast("double") / n)

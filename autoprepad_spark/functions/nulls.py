@@ -1,13 +1,10 @@
-"""Null handling: indicators, fingerprints, rates, imputation.
+"""Null handling: fingerprints, rates, imputation.
 
 Reference parity:
-* per-column 0/1 null indicators (NaNColumnCreator.py:25-36 /
-  sklearn MissingIndicator, pipelines/configuration.py:144)
 * row null-pattern fingerprint: concat of 0/1 flags, REVERSED, read as a
   binary integer (NaNColumnCreatorTotal.py:33-54 via BitArray.int) — one
   integer encoding which columns are null in the row
-* median / most-frequent imputation (pipelines/configuration.py:187-190,
-  287-290 SimpleImputer)
+* median imputation (pipelines/configuration.py:187-190 SimpleImputer)
 
 All pure Column expressions or single aggregations; the fingerprint stays
 JVM-side (bit-shift sum, no string building).
@@ -16,10 +13,6 @@ JVM-side (bit-shift sum, no string building).
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
-
-
-def null_indicator(col: str) -> Column:
-    return F.isnull(col).cast("int")
 
 
 def null_fingerprint(cols: list[str], *, reference_bit_order: bool = True) -> Column:
@@ -81,16 +74,6 @@ def impute_median(df: DataFrame, cols: list[str], *, method: str = "hist") -> Da
     out = df
     for c in cols:
         out = out.withColumn(c, F.coalesce(F.col(c), F.lit(meds[c])))
-    return out
-
-
-def impute_mode(df: DataFrame, cols: list[str]) -> DataFrame:
-    """SimpleImputer(strategy='most_frequent') — F.mode is a real
-    aggregate (partial+final), one pass for all columns."""
-    modes = df.agg(*[F.mode(F.col(c)).alias(c) for c in cols]).collect()[0]
-    out = df
-    for c in cols:
-        out = out.withColumn(c, F.coalesce(F.col(c), F.lit(modes[c])))
     return out
 
 

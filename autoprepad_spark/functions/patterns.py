@@ -5,8 +5,7 @@ to a class — Upper, lower, digit, other — and the per-string class
 sequence plus its length become features that expose format breaks
 (e.g. 'Hund123' vs 'Hund'). The reference emits a BitArray hex string
 (Upper->00 lower->01 digit->10 other->11, leading '0'); we default to the
-readable class alphabet U/l/d/o (same information, SQL-portable) and
-provide the exact bit-string variant for parity.
+readable class alphabet U/l/d/o (same information, SQL-portable).
 
 Chained regexp_replace stays inside whole-stage codegen — no UDF.
 """
@@ -24,24 +23,3 @@ def charclass_encode(col: Column | str) -> Column:
     out = F.regexp_replace(out, "[0-9]", "d")
     out = F.regexp_replace(out, "[^Uld]", "o")
     return out
-
-
-def charclass_bits(col: Column | str) -> Column:
-    """Exact reference encoding: classes as 2-bit codes 00/01/10/11 with a
-    leading '0' (CategoricalPatterns.py:60-78)."""
-    enc = charclass_encode(col)
-    out = F.regexp_replace(enc, "U", "00")
-    out = F.regexp_replace(out, "l", "01")
-    out = F.regexp_replace(out, "d", "10")
-    out = F.regexp_replace(out, "o", "11")
-    return F.concat(F.lit("0"), out)
-
-
-def pattern_features(col: Column | str) -> list[Column]:
-    """(pattern, length) feature pair (CategoricalPatterns.py:78 adds _len)."""
-    c = F.col(col) if isinstance(col, str) else col
-    name = col if isinstance(col, str) else "col"
-    return [
-        charclass_encode(c).alias(f"{name}_pattern"),
-        F.length(c).alias(f"{name}_len"),
-    ]

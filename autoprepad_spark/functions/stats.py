@@ -81,7 +81,8 @@ def _col_histograms(
     materializes more than ~cap cells and the upstream scan+agg executes
     exactly ONCE. Measured at sf0.1 lineitem x3 cols (583k cells):
     1.33s vs 5.53s for the round-3 persist->count->collect shape and
-    1.20s unguarded — the guard is now ~free (tools/fit_guard_ab.py).
+    1.20s unguarded — the guard is now ~free (BENCH/BASELINE.md, "the
+    histogram-fit guard rides the collecting action").
     (Round 3's note about LIMIT probes being 4x worse applied to a
     SEPARATE limit+count probe action before a full collect; a limit on
     the collecting action has no second pass to re-plan.)"""
@@ -329,17 +330,6 @@ def variance_report(df: DataFrame, cols: list[str]) -> DataFrame:
     return df.sparkSession.createDataFrame(
         out, "column string, stddev double, n_null long, dropped boolean"
     )
-
-
-def prune_no_variance(
-    df: DataFrame, cols: list[str], *, protect: tuple[str, ...] = ()
-) -> DataFrame:
-    """Drop no-variance / any-null columns (runs.py:310-365); `protect`
-    mirrors the experiment variant that preserves MAD_Total/Tukey_Total
-    (experiment.py:551-559)."""
-    rep = variance_report(df, [c for c in cols if c not in protect])
-    to_drop = [r["column"] for r in rep.collect() if r["dropped"]]
-    return df.drop(*to_drop)
 
 
 def fit_robust_multi(

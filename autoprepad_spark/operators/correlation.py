@@ -31,8 +31,6 @@ import numpy as np
 from pyspark.storagelevel import StorageLevel
 from pyspark.sql import DataFrame, functions as F, types as T
 
-SPEARMAN_WARN = 0.98  # SpearmanCheck.py:31
-
 
 #: same bounded-domain contract as functions.stats._col_histograms —
 #: the per-column distinct set must fit on the driver.
@@ -119,8 +117,3 @@ def spearman_matrix(df: DataFrame, cols: list[str]) -> DataFrame:
         rho = cov / (va * vb) ** 0.5 if va > 0 and vb > 0 else float("nan")
         out.append((a, b, float(rho)))
     return df.sparkSession.createDataFrame(out, "col_a string, col_b string, rho double")
-
-
-def near_duplicate_columns(df: DataFrame, cols: list[str], threshold: float = SPEARMAN_WARN) -> DataFrame:
-    m = spearman_matrix(df, cols)
-    return m.filter(F.abs(F.col("rho")) >= threshold)

@@ -192,10 +192,11 @@ def minhash_signatures(
         codegen, and partial aggregation collapses each doc to one
         264-byte row before the exchange — the shuffle is |docs|-sized,
         never |shingles|-sized. Measured on 2M docs, pinned cores
-        (tools/dedup_scale.py): the WRONG variant of this plan — caching
-        the exploded index to share with verification — is bandwidth-
-        flat (44s at 4 cores -> 44s at 16); uncached it is the fastest
-        CPU path because every hash evaluates in codegen.
+        (BENCH/BASELINE.md, "dedup-family scaling"): the WRONG variant
+        of this plan — caching the exploded index to share with
+        verification — is bandwidth-flat (44s at 4 cores -> 44s at 16);
+        uncached it is the fastest CPU path because every hash evaluates
+        in codegen.
       * ``"map"`` — minhash_signature_col per row: no explode, no
         shuffle, no agg hash table. Sounds optimal, measured 4x MORE
         single-core CPU (175s vs ~40s at 4 cores, same 2M docs): the

@@ -82,7 +82,7 @@ def quantized_score_hist(
     max_cells+1`` rides the collecting action itself, so per-partition
     localLimit bounds every task's output and nothing oversized ever
     reaches the driver (same measured-~free pattern as
-    stats._col_histograms, tools/fit_guard_ab.py). Only when the probe
+    stats._col_histograms; BENCH/BASELINE.md). Only when the probe
     proves the domain continuous (> max_cells cells) does the quantized
     fallback run: the exact joint histogram is then persisted on the
     executors (memory-and-disk — spills instead of OOMing), and min/max

@@ -472,21 +472,6 @@ def image_thumbnails(df: DataFrame, *, partitions: int | None = None) -> DataFra
     return src.mapInPandas(run, schema=THUMBNAIL_SCHEMA)
 
 
-def frame_sample_plan(df: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling plan: (media_id, frame_ts_ms) rows — the
-    explode is metadata-only (duration), payload untouched until decode."""
-    n = F.floor(F.col("duration_ms") / every_ms).cast("int")
-    return (
-        df.filter((F.col("kind") == "video") & F.col("duration_ms").isNotNull())
-        .select(
-            "media_id",
-            F.explode(
-                F.transform(F.sequence(F.lit(0), F.greatest(n - 1, F.lit(0))), lambda i: i * every_ms)
-            ).alias("frame_ts_ms"),
-        )
-    )
-
-
 def synth_media(spark, n: int = 64, seed: int = 42) -> DataFrame:
     """Deterministic media table: REAL encoded payloads for all three
     kinds — 24-bit BMP images, PCM WAV audio, uncompressed AVI video."""

@@ -28,7 +28,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window as W, functions as F, types as T
 
-from autoprepad_spark.functions.arrays import cosine, dot, l2_norm
+from autoprepad_spark.functions.arrays import cosine, dot
 
 
 def brute_force_topk(
@@ -685,51 +685,6 @@ FROM (SELECT 'lsh' AS method, * FROM lr WHERE rnk <= {k}
       UNION ALL
       SELECT 'ivf' AS method, * FROM ir WHERE rnk <= {k}{jl_union})
 """
-
-
-def embedding_near_duplicates(
-    corpus: DataFrame,
-    *,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 12,
-    n_tables: int = 4,
-    seed: int = 7,
-    dim: int | None = None,
-    sig_method: str = "udf",
-) -> DataFrame:
-    """Near-duplicate pairs by embedding cosine, LSH-bucketed: only pairs
-    agreeing on a full signature in some table are scored.
-
-    Pass ``dim`` (the embedding width) to skip the one-row peek job."""
-    if dim is None:
-        dim = _infer_dim(corpus, vec_col)
-    pairs = None
-    for t in range(n_tables):
-        planes = _random_planes(dim, n_planes, seed + t)
-        if sig_method == "udf":
-            u = lsh_signature_udf(np.asarray(planes))
-            sig = u(F.col(vec_col))
-        else:
-            sig = lsh_signature(vec_col, planes)
-        b = corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"), sig.alias("_b"))
-        p = (
-            b.alias("a").join(b.alias("b"), "_b")
-            .filter(F.col("a._id") < F.col("b._id"))
-            .select(
-                F.col("a._id").alias("id_a"),
-                F.col("b._id").alias("id_b"),
-                F.col("a._v").alias("_va"),
-                F.col("b._v").alias("_vb"),
-            )
-        )
-        pairs = p if pairs is None else pairs.unionByName(p)
-    pairs = pairs.dropDuplicates(["id_a", "id_b"])
-    return (
-        pairs.select("id_a", "id_b", cosine("_va", "_vb").alias("cos_sim"))
-        .filter(F.col("cos_sim") >= threshold)
-    )
 
 
 def semantic_duplicates(

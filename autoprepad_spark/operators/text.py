@@ -44,16 +44,6 @@ def punct_ratio(col: Column | str) -> Column:
     )
 
 
-def stopword_ratio(col: Column | str, lang: str = "en") -> Column:
-    """Fraction of whitespace tokens that are stopwords."""
-    c = F.col(col) if isinstance(col, str) else col
-    words = F.split(normalize_text(c), " ")
-    hits = F.size(
-        F.filter(words, lambda w: w.isin(*LANG_STOPWORDS[lang]))
-    )
-    return F.when(F.size(words) == 0, F.lit(0.0)).otherwise(hits / F.size(words))
-
-
 def mean_word_length(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     words = F.split(normalize_text(c), " ")
@@ -231,11 +221,6 @@ def top_ngram_fraction(col: Column | str, n: int = 2) -> Column:
         return F.transform(F.array(grams), with_grams)[0]
 
     return F.transform(F.array(words), with_words)[0]
-
-
-def top_bigram_fraction(col: Column | str) -> Column:
-    """Gopher rep-2: see top_ngram_fraction."""
-    return top_ngram_fraction(col, 2)
 
 
 def dup_ngram_char_fraction(col: Column | str, n: int = 5) -> Column:

@@ -22,8 +22,6 @@ a Python worker for the one-task write.
 
 from __future__ import annotations
 
-import uuid
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -83,7 +81,3 @@ class CheckpointTable:
         if not done:
             return df
         return df.filter(~F.col("part").isin(done))
-
-
-def new_run_id() -> str:
-    return uuid.uuid4().hex[:12]

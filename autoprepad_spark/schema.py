@@ -5,9 +5,10 @@ The reference *infers and coerces* schemas on an untyped pandas frame
 string NaN sentinels -> true NaN, object -> datetime/float with
 errors="coerce". At 10^12-row Iceberg scale the schema is declared, so the
 capability inverts: we *validate* an incoming DataFrame against the declared
-StructType (names, types, nullability, castability) and expose the same
-coercion primitives (sentinel normalization, null-on-failure casts) as
-native Column expressions for semi-typed ingest paths.
+StructType (names, types, nullability, castability). The coercion
+primitives for semi-typed ingest paths (sentinel normalization,
+null-on-failure casts) are ``sources.tables.normalize_sentinels`` and
+``coerce_to_schema``.
 """
 
 from __future__ import annotations
@@ -188,39 +189,3 @@ def conform(df: DataFrame, expected: T.StructType) -> DataFrame:
         else:
             cols.append(F.lit(None).cast(f.dataType).alias(f.name))
     return df.select(*cols)
-
-
-def normalize_nan_sentinels(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
-    """Rewrite string NaN sentinels ("NaN","nan"," ","") to true null.
-
-    Parity with XCopySchemaTransformer.py:55-63; expressed as a native
-    when/otherwise so Catalyst folds it into the scan projection.
-    """
-    if columns is None:
-        columns = [f.name for f in df.schema.fields if isinstance(f.dataType, T.StringType)]
-    out = df
-    for c in columns:
-        out = out.withColumn(
-            c, F.when(F.col(c).isin(*NAN_SENTINELS), F.lit(None)).otherwise(F.col(c))
-        )
-    return out
-
-
-def coerce_types(
-    df: DataFrame,
-    *,
-    datetime_columns: list[str] | None = None,
-    numeric_columns: list[str] | None = None,
-) -> DataFrame:
-    """string->timestamp / string->double with null-on-failure.
-
-    The declarative analog of the reference's inference loop
-    (XCopySchemaTransformer.py:65-98): callers declare which columns to
-    coerce instead of sniffing dtypes row-by-row.
-    """
-    out = df
-    for c in datetime_columns or []:
-        out = out.withColumn(c, F.to_timestamp(F.col(c)))
-    for c in numeric_columns or []:
-        out = out.withColumn(c, F.col(c).try_cast("double"))
-    return out

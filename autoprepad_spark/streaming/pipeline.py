@@ -1,49 +1,49 @@
-"""Composable streaming pipeline: dedup -> validate -> score in ONE
-micro-batch pass (VERDICT r4 next-round #7 — the unification of the
-single-purpose streaming faces in validate.py / score.py).
+"""The streaming engine: every file-stream face of the package is a
+stage of ``stream_pipeline``, composed inside ONE ``foreachBatch``.
 
-An ingest pipeline rarely wants one of these alone: arriving files
-should be deduplicated against everything ever accepted, the SURVIVORS
-validated against train-fitted constraints, and the survivors scored
-with a batch-fitted anomaly model — all without reading the batch
-three times or running three separate streaming queries against three
-checkpoints (which would triple the file-source bookkeeping and lose
-the shared scan). ``stream_pipeline`` runs the composition inside one
-``foreachBatch``:
+An ingest pipeline rarely wants one check alone: arriving files should
+be deduplicated against everything ever accepted, the SURVIVORS
+validated against train-fitted constraints, scored with a batch-fitted
+anomaly model and compared against a baseline distribution, all
+without reading the batch once per check or running one streaming
+query per check against its own checkpoint. Pass any subset of
+DedupStage / ValidateStage / ScoreStage / DriftStage:
 
 * ONE readStream + ONE checkpoint own the file-source log;
-* the batch is cached once; dedup's kept-subset (computed via the
-  SAME ``incremental.run_shard_dedup`` machinery as the standalone
-  face, index excluded-current-partition read included) feeds validate
-  and score directly — dropped rows never reach the validators;
-* EVERY sink — kept / dropped / index / verdicts / violations /
-  scored / alerts — is hive-partitioned by ``ingest_batch`` and
-  written with dynamic partition OVERWRITE, so a batch replayed after
-  a crash between any sink write and the checkpoint commit overwrites
-  its own partitions across the WHOLE composed output instead of
-  duplicating any of them (the property the replay test drives);
-* the validate and score stages, and within them the violations and
-  verdicts sinks and the scored and alerts sinks, are written
-  CONCURRENTLY (``_concurrently``). A small file's batch makes every
-  write a one-task job, so one after another they would leave all but
-  one core idle. It is safe because no sink reads another's output:
-  verdicts read the cached violations frame, alerts the cached scored
-  frame, and both stages the cached batch. A cache is unpersisted
-  only after every write that reads it has returned; two jobs that
-  race for one cached partition compute it once (the block manager's
-  write lock), and the sink jobs inherit the query's job group, so
-  ``query.stop()`` still cancels them. Dedup's writes stay sequential.
+  ``Trigger.AvailableNow`` drains the backlog and stops (scheduled
+  incremental validation), ``available_now=False`` runs continuously;
+* the batch is cached once; dedup's kept subset (computed by
+  ``incremental.run_shard_dedup`` against the persisted index, the
+  current batch's own partition excluded) feeds the other stages, so
+  dropped rows never reach the validators;
+* EVERY sink (kept / dropped / index / verdicts / violations / scored /
+  alerts / drift) is written by ``_sink``: hive-partitioned by
+  ``ingest_batch`` with dynamic partition OVERWRITE, so a batch
+  replayed after a crash between any sink write and the checkpoint
+  commit overwrites its own partitions instead of duplicating rows;
+* the validate, score and drift stages, and within them the
+  violations and verdicts sinks and the scored and alerts sinks, are
+  written CONCURRENTLY (``_concurrently``). A small file's batch makes
+  every write a one-task job, so one after another they would leave
+  all but one core idle. It is safe because no sink reads another's
+  output: verdicts read the cached violations frame, alerts the cached
+  scored frame, and every stage the cached batch. A cache is
+  unpersisted only after every write that reads it has returned; two
+  jobs that race for one cached partition compute it once (the block
+  manager's write lock), and the sink jobs inherit the query's job
+  group, so ``query.stop()`` still cancels them. Dedup's writes stay
+  sequential.
 
-Stages are opt-in: pass any subset of DedupStage / ValidateStage /
-ScoreStage. A single-stage pipeline is exactly the corresponding
-standalone face with the hardened sink convention, and
-``stream_validate`` / ``stream_score`` run this module's stage bodies
-(keyed on ``batch_id``).
+Validation needs no state beyond the checkpoint (marking is a pure
+map), and uniqueness is not checked per batch: a global property
+cannot be decided on a file subset. The stream-frame transforms that
+need the state store (windowed profiles, running totals, watermarked
+exact dedup) live in ``streaming/validate.py``.
 
-Scale shape: unchanged from the standalone faces — dedup exchanges
-O(|batch|) signature rows against a partition-pruned index, marking is
-a pure Arrow/codegen map, scoring a stateless projection; composing
-them adds zero extra passes over the batch beyond the one cache.
+Scale shape: dedup exchanges O(|batch|) signature rows against a
+partition-pruned index, marking is a pure Arrow/codegen map, scoring a
+stateless projection, drift one |sources| x |buckets| aggregation;
+composing them adds no pass over the batch beyond the one cache.
 """
 
 from __future__ import annotations
@@ -54,6 +54,7 @@ from dataclasses import dataclass, field
 from pyspark import InheritableThread
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
 
+from autoprepad_spark.operators import drift as D
 from autoprepad_spark.operators.marking import mark_slim
 from autoprepad_spark.operators.profile import ProfileStats
 from autoprepad_spark.plans import verdicts as V
@@ -63,8 +64,15 @@ from autoprepad_spark.sources.tables import list_names
 
 @dataclass(frozen=True)
 class DedupStage:
-    """Shard-vs-history dedup config (streaming/validate.py
-    stream_dedup_against_index semantics, verbatim)."""
+    """Shard-vs-history dedup against the PERSISTED sketch index (the
+    streaming face of operators/incremental.py). Each batch is exact-
+    deduped within itself (keep-first: smallest id wins), then against
+    everything ever accepted (one content-hash anti-join plus a band-
+    bucket lookup; the historical text is never read), and the kept
+    rows' (doc_id, content_hash, sig) rows join the index, so the NEXT
+    batch sees them as history. Near-dups that arrive within one batch
+    are both kept; they are caught if either text arrives again. Seed
+    the history with ``seed_index``."""
 
     index_path: str
     kept_path: str
@@ -80,9 +88,11 @@ class DedupStage:
 
 @dataclass(frozen=True)
 class ValidateStage:
-    """Train-fitted constraint marking config (stream_validate
-    semantics; uniqueness intentionally excluded — a global property
-    cannot be decided on a file subset)."""
+    """Train-fitted constraint marking: the batch suite's marking pass
+    with the TRAIN stats (the reference's fit-then-predict split),
+    writing violation rows and per-(batch, part) verdicts. Uniqueness
+    is excluded (a global property cannot be decided on a file
+    subset), and ref_source is checked only when ``dim`` is given."""
 
     stats: ProfileStats
     verdict_path: str
@@ -93,8 +103,16 @@ class ValidateStage:
 
 @dataclass(frozen=True)
 class ScoreStage:
-    """Batch-fitted scorer config (stream_score semantics: the fitted
-    model IS the Column/UDF closure; threshold fixed at fit time)."""
+    """Batch-fitted anomaly scoring. Every scorer in the engine ships
+    its fitted state as plan literals inside a Column expression or
+    Arrow UDF (``scoring.ensemble_score``, ``scoring.mahalanobis_score``,
+    ``spectral.pca_score_udf``), so streaming inference is that Column
+    applied per batch. ``keep_cols`` is the projection of both sinks
+    (default: every column; ``[]`` keeps none), with ``anomaly_score``
+    appended. Rows scoring above ``threshold`` also go to the alert
+    sink, so a monitor tails a small table; fit the threshold
+    batch-side, since a per-batch quantile would alert relative to each
+    batch's own distribution."""
 
     score: Column
     scored_path: str
@@ -107,18 +125,37 @@ class ScoreStage:
             raise ValueError("threshold and alert_path must be set together")
 
 
-def _sink(df: DataFrame, path: str, batch_id: int, batch_col: str = "ingest_batch") -> None:
+@dataclass(frozen=True)
+class DriftStage:
+    """Per-batch distribution drift: each batch's per-source n_tok
+    histogram is compared against the checkpointed baseline histogram
+    (PSI + chi², the batch drift operator), one row per (batch,
+    source). The state is only the |sources| x |buckets| histogram, so
+    batch size does not change the memory footprint."""
+
+    baseline_hist: DataFrame
+    drift_path: str
+    bucket_width: int = D.DEFAULT_BUCKET_WIDTH
+
+
+def _sink(df: DataFrame, path: str, batch_id: int) -> None:
     """The streaming-wide idempotent sink: dynamic partition overwrite
-    keyed on the batch column — a replayed batch replaces its own
-    partition (metadata-level), never duplicates. The single-stage
-    faces in validate.py / score.py key it on ``batch_id``."""
+    keyed on ``ingest_batch``, so a replayed batch replaces its own
+    partition (metadata-level) and never duplicates it."""
     (
-        df.withColumn(batch_col, F.lit(batch_id))
+        df.withColumn("ingest_batch", F.lit(batch_id))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(batch_col)
+        .partitionBy("ingest_batch")
         .parquet(path)
     )
+
+
+def seed_index(index: DataFrame, index_path: str) -> None:
+    """Persist an initial dedup history (e.g. ``build_dedup_index`` over
+    the existing corpus) in the layout DedupStage reads, under
+    ``ingest_batch=-1``."""
+    _sink(index, index_path, -1)
 
 
 def _dedup_batch(
@@ -233,7 +270,6 @@ def _validate_batch(
     allowed: list[str] | None,
     df: DataFrame,
     batch_id: int,
-    batch_col: str = "ingest_batch",
 ) -> None:
     kwargs = {} if cfg.vocab_size is None else {"vocab_size": cfg.vocab_size}
     marked = mark_slim(df, cfg.stats, allowed_sources=allowed, **kwargs)
@@ -246,16 +282,14 @@ def _validate_batch(
             checks = [c for c in checks if c != "ref_source"]
         verd = V.assemble_verdicts(row_counts, viol, checks)
         _concurrently(
-            lambda: _sink(viol, cfg.violation_path, batch_id, batch_col),
-            lambda: _sink(verd, cfg.verdict_path, batch_id, batch_col),
+            lambda: _sink(viol, cfg.violation_path, batch_id),
+            lambda: _sink(verd, cfg.verdict_path, batch_id),
         )
     finally:
         viol.unpersist()
 
 
-def _score_batch(
-    cfg: ScoreStage, df: DataFrame, batch_id: int, batch_col: str = "ingest_batch"
-) -> None:
+def _score_batch(cfg: ScoreStage, df: DataFrame, batch_id: int) -> None:
     cols = df.columns if cfg.keep_cols is None else cfg.keep_cols
     out = df.select(*cols, cfg.score.alias("anomaly_score"))
     if cfg.threshold is not None:
@@ -264,14 +298,19 @@ def _score_batch(
         out = out.cache()
         try:
             _concurrently(
-                lambda: _sink(out, cfg.scored_path, batch_id, batch_col),
+                lambda: _sink(out, cfg.scored_path, batch_id),
                 lambda: _sink(out.filter(F.col("anomaly_score") > cfg.threshold),
-                              cfg.alert_path, batch_id, batch_col),
+                              cfg.alert_path, batch_id),
             )
         finally:
             out.unpersist()
     else:
-        _sink(out, cfg.scored_path, batch_id, batch_col)
+        _sink(out, cfg.scored_path, batch_id)
+
+
+def _drift_batch(cfg: DriftStage, df: DataFrame, batch_id: int) -> None:
+    cur = D.ntok_histogram(df, bucket_width=cfg.bucket_width)
+    _sink(D.drift(cfg.baseline_hist, cur), cfg.drift_path, batch_id)
 
 
 def stream_pipeline(
@@ -283,19 +322,20 @@ def stream_pipeline(
     dedup: DedupStage | None = None,
     validate: ValidateStage | None = None,
     score: ScoreStage | None = None,
+    drift: DriftStage | None = None,
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ):
     """Start the composed ingest pipeline; returns the StreamingQuery.
 
-    Stage order is fixed — dedup, then validate, then score — because
-    that is the only order with coherent semantics: validating or
-    scoring rows that dedup is about to drop wastes work AND pollutes
-    verdicts/alerts with rows the corpus never accepts. Pass any
-    subset; at least one stage is required.
+    Dedup runs first and the other stages see only its survivors:
+    validating, scoring or profiling rows that dedup is about to drop
+    wastes work AND pollutes verdicts, alerts and drift with rows the
+    corpus never accepts. Validate, score and drift run side by side.
+    Pass any subset; at least one stage is required.
     """
-    if dedup is None and validate is None and score is None:
-        raise ValueError("at least one stage (dedup/validate/score) required")
+    if dedup is None and validate is None and score is None and drift is None:
+        raise ValueError("at least one stage (dedup/validate/score/drift) required")
 
     struct = (
         schema if isinstance(schema, T.StructType)
@@ -317,6 +357,8 @@ def stream_pipeline(
             stages.append(lambda: _validate_batch(validate, allowed, df, batch_id))
         if score is not None:
             stages.append(lambda: _score_batch(score, df, batch_id))
+        if drift is not None:
+            stages.append(lambda: _drift_batch(drift, df, batch_id))
         if stages:
             _concurrently(*stages)
 

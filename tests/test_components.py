@@ -128,7 +128,7 @@ def test_checkpoint_resume_skips_done_parts(spark, tokens_df, dim_df, tmp_path):
 
 
 def test_stream_validate_incremental(spark, dim_df, tmp_path):
-    from autoprepad_spark.streaming.validate import stream_validate
+    from autoprepad_spark.streaming.pipeline import ValidateStage, stream_pipeline
 
     base = G.generate_tokens(spark, 20_000, seed=11, n_parts=4).cache()
     stats = global_stats(base)
@@ -136,11 +136,16 @@ def test_stream_validate_incremental(spark, dim_df, tmp_path):
     base.write.mode("overwrite").parquet(inp)
 
     paths = dict(
-        checkpoint_dir=str(tmp_path / "ckpt"),
         verdict_path=str(tmp_path / "verd"),
         violation_path=str(tmp_path / "viol"),
     )
-    q = stream_validate(spark, inp, stats=stats, dim=dim_df, **paths)
+
+    def drain():
+        return stream_pipeline(spark, inp, schema=base.schema,
+                               checkpoint_dir=str(tmp_path / "ckpt"),
+                               validate=ValidateStage(stats, dim=dim_df, **paths))
+
+    q = drain()
     q.awaitTermination(120)
 
     verd = spark.read.parquet(paths["verdict_path"])
@@ -154,17 +159,17 @@ def test_stream_validate_incremental(spark, dim_df, tmp_path):
     assert verd.filter(F.col("check_name") == "unique_doc_id").count() == 0
 
     # drain again with no new files: checkpoint prevents reprocessing
-    q2 = stream_validate(spark, inp, stats=stats, dim=dim_df, **paths)
+    q2 = drain()
     q2.awaitTermination(120)
     assert spark.read.parquet(paths["verdict_path"]).count() == verd.count()
 
     # new files arrive -> only they are processed on the next drain
     extra = G.generate_tokens(spark, 5_000, seed=12, n_parts=4)
     extra.write.mode("append").parquet(inp)
-    q3 = stream_validate(spark, inp, stats=stats, dim=dim_df, **paths)
+    q3 = drain()
     q3.awaitTermination(120)
     verd2 = spark.read.parquet(paths["verdict_path"])
-    assert verd2.select("batch_id").distinct().count() > verd.select("batch_id").distinct().count()
+    assert verd2.select("ingest_batch").distinct().count() > verd.select("ingest_batch").distinct().count()
 
 
 def test_stream_profile_windowed(spark, tmp_path):

@@ -192,7 +192,7 @@ def test_pack_sequences_greedy(spark):
 def test_stream_drift_per_batch(spark, tmp_path):
     from autoprepad_spark import datagen as G
     from autoprepad_spark.operators import drift as DRM
-    from autoprepad_spark.streaming.validate import stream_drift
+    from autoprepad_spark.streaming.pipeline import DriftStage, stream_pipeline
 
     base = G.generate_tokens(spark, 15_000, seed=21, n_parts=4)
     baseline = DRM.ntok_histogram(base).cache()
@@ -203,23 +203,23 @@ def test_stream_drift_per_batch(spark, tmp_path):
     G.generate_tokens(spark, 8_000, seed=22, n_parts=4).write.mode(
         "overwrite"
     ).parquet(inp)
-    kw = dict(
-        baseline_hist=baseline,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        drift_path=str(tmp_path / "drift"),
-    )
-    stream_drift(spark, inp, **kw).awaitTermination(120)
-    d1 = spark.read.parquet(kw["drift_path"]).toPandas()
-    assert set(d1.batch_id) == {0}
+    drift_path = str(tmp_path / "drift")
+
+    def drain():
+        stream_pipeline(spark, inp, schema=base.schema, checkpoint_dir=str(tmp_path / "ckpt"),
+                        drift=DriftStage(baseline, drift_path)).awaitTermination(120)
+        return spark.read.parquet(drift_path).toPandas()
+
+    d1 = drain()
+    assert set(d1.ingest_batch) == {0}
     assert (d1[d1.source == "web"].psi < 0.1).all()  # same distribution
 
     G.generate_tokens(
         spark, 8_000, seed=23, n_parts=4, drift_source="web", drift_shift=1.5
     ).write.mode("append").parquet(inp)
-    stream_drift(spark, inp, **kw).awaitTermination(120)
-    d2 = spark.read.parquet(kw["drift_path"]).toPandas()
-    assert d2.batch_id.nunique() == 2
-    newest = d2[d2.batch_id == d2.batch_id.max()]
+    d2 = drain()
+    assert d2.ingest_batch.nunique() == 2
+    newest = d2[d2.ingest_batch == d2.ingest_batch.max()]
     assert (newest[newest.source == "web"].psi > 0.2).all()  # shift detected
     baseline.unpersist()
 

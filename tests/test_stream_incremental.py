@@ -1,18 +1,15 @@
-"""Streaming shard-vs-history dedup: two shards arrive as separate
-micro-batch rounds; results must equal the batch incremental operators,
-and index growth must make batch-2 drops depend on batch-1 keeps."""
+"""Streaming shard-vs-history dedup (a dedup-only ``stream_pipeline``)
+with long ids: two shards arrive as separate micro-batch rounds;
+results must equal the batch incremental operators, and index growth
+must make batch-2 drops depend on batch-1 keeps."""
 
 from __future__ import annotations
 
 import numpy as np
-import pytest
-from pyspark.sql import functions as F, types as T
+from pyspark.sql import types as T
 
 from autoprepad_spark.operators import incremental as INC
-from autoprepad_spark.streaming.validate import (
-    seed_index,
-    stream_dedup_against_index,
-)
+from autoprepad_spark.streaming.pipeline import DedupStage, seed_index, stream_pipeline
 
 SCHEMA = T.StructType(
     [
@@ -45,15 +42,13 @@ def _paths(tmp_path):
 
 
 def _run(spark, p):
-    q = stream_dedup_against_index(
+    q = stream_pipeline(
         spark,
         p["inp"],
         schema=SCHEMA,
-        index_path=p["idx"],
-        kept_path=p["kept"],
-        dropped_path=p["drop"],
         checkpoint_dir=p["ckpt"],
-        threshold=0.8,
+        dedup=DedupStage(index_path=p["idx"], kept_path=p["kept"],
+                         dropped_path=p["drop"], threshold=0.8),
     )
     q.awaitTermination(120)
 
@@ -112,18 +107,3 @@ def test_two_shard_rounds_match_batch_semantics(spark, tmp_path):
         for r in INC.build_dedup_index(all_docs).collect()
     )
     assert kept_rows == want
-
-
-def test_restart_with_same_checkpoint_is_noop(spark, tmp_path):
-    p = _paths(tmp_path)
-    seed_index(INC.build_dedup_index(spark.createDataFrame(HIST, SCHEMA)), p["idx"])
-    spark.createDataFrame(SHARD1, SCHEMA).coalesce(1).write.mode("append").parquet(
-        p["inp"]
-    )
-    _run(spark, p)
-    before = sorted(
-        tuple(r) for r in spark.read.parquet(p["kept"]).collect()
-    )
-    _run(spark, p)  # no new files: file-source log says nothing to do
-    after = sorted(tuple(r) for r in spark.read.parquet(p["kept"]).collect())
-    assert after == before

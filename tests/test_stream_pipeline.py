@@ -1,15 +1,16 @@
-"""Composed streaming pipeline (streaming/pipeline.py): dedup ->
-validate -> score in one foreachBatch over one checkpoint.
+"""Composed streaming pipeline (streaming/pipeline.py): dedup, then
+validate, score and drift, in one foreachBatch over one checkpoint.
 
-Pins the three seams the standalone-face tests cannot: (1) validators
-and scorer see ONLY dedup survivors; (2) a full replay (fresh
+Pins the three seams the single-stage tests cannot: (1) validators,
+scorer and drift see ONLY dedup survivors; (2) a full replay (fresh
 checkpoint, same files) leaves EVERY composed sink — kept, dropped,
-index, verdicts, violations, scored, alerts — row-for-row identical
-(dynamic partition overwrite across the whole pipeline); (3) a restart
-with the checkpoint intact is a no-op until new files arrive, and then
-processes only them. It also pins the concurrent sink writes: they
-overlap, stay in the query's job group and scan the batch once, and a
-failing stage surfaces only after its sibling writes have returned.
+index, verdicts, violations, scored, alerts, drift — row-for-row
+identical (dynamic partition overwrite across the whole pipeline); (3)
+a restart with the checkpoint intact is a no-op until new files
+arrive, and then processes only them. It also pins the concurrent sink
+writes: they overlap, stay in the query's job group and scan the batch
+once, and a failing stage surfaces only after its sibling writes have
+returned.
 """
 
 from __future__ import annotations
@@ -24,14 +25,16 @@ import pytest
 from pyspark.sql import functions as F, types as T
 
 from autoprepad_spark.operators import incremental as INC
+from autoprepad_spark.operators.drift import ntok_histogram
 from autoprepad_spark.operators.profile import global_stats
 from autoprepad_spark.streaming.pipeline import (
     DedupStage,
+    DriftStage,
     ScoreStage,
     ValidateStage,
+    seed_index,
     stream_pipeline,
 )
-from autoprepad_spark.streaming.validate import seed_index
 
 SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType()),
@@ -72,7 +75,7 @@ FILE2 = [
 def paths(tmp_path):
     return {k: str(tmp_path / k) for k in
             ("inp", "idx", "kept", "drop", "ckpt",
-             "verd", "viol", "scored", "alerts")}
+             "verd", "viol", "scored", "alerts", "drift")}
 
 
 def _stages(spark, paths, stats):
@@ -84,6 +87,8 @@ def _stages(spark, paths, stats):
         score=ScoreStage(score=F.col("n_tok").cast("double"),
                          scored_path=paths["scored"],
                          alert_path=paths["alerts"], threshold=60.0),
+        drift=DriftStage(baseline_hist=ntok_histogram(spark.createDataFrame(FILE1, SCHEMA)),
+                         drift_path=paths["drift"]),
     )
 
 
@@ -98,7 +103,7 @@ def _drain(spark, paths, stats):
 
 def _snapshot(spark, paths):
     out = {}
-    for k in ("idx", "kept", "drop", "verd", "viol", "scored", "alerts"):
+    for k in ("idx", "kept", "drop", "verd", "viol", "scored", "alerts", "drift"):
         df = spark.read.parquet(paths[k])
         out[k] = sorted(
             tuple(str(v) for v in row)
@@ -152,6 +157,10 @@ def test_composed_pipeline_and_replay(spark, paths, stats):
                   (1, "p-0"): 1, (1, "p-1"): 1}
     # uniqueness is excluded by design on a file subset
     assert verd.filter(F.col("check_name") == "unique_doc_id").count() == 0
+    # drift histograms count survivors per batch too
+    drift = {(r["ingest_batch"], r["source"]): r["current_n"]
+             for r in spark.read.parquet(paths["drift"]).collect()}
+    assert drift == {(0, "web"): 2, (1, "web"): 2}
 
     # (2) FULL REPLAY: wipe the checkpoint, re-drain the same files —
     # every composed sink must come out row-for-row identical (dynamic
@@ -181,74 +190,6 @@ def test_stage_guards(spark, paths, stats):
                         checkpoint_dir=paths["ckpt"])
     with pytest.raises(ValueError, match="together"):
         ScoreStage(score=F.lit(0.0), scored_path="x", threshold=1.0)
-
-
-def test_validate_only_pipeline_matches_stream_validate(spark, tmp_path, stats):
-    """A single-stage pipeline is the standalone face with the hardened
-    sink: same verdicts as stream_validate on the same input."""
-    from autoprepad_spark.datagen import generate_tokens
-    from autoprepad_spark.streaming.validate import stream_validate
-
-    base = generate_tokens(spark, 8_000, seed=13, n_parts=4)
-    inp = str(tmp_path / "vin")
-    base.write.mode("overwrite").parquet(inp)
-
-    q = stream_pipeline(
-        spark, inp, schema=base.schema,
-        checkpoint_dir=str(tmp_path / "ck1"),
-        validate=ValidateStage(stats=stats,
-                               verdict_path=str(tmp_path / "v1"),
-                               violation_path=str(tmp_path / "x1")),
-    )
-    q.awaitTermination(120)
-    q2 = stream_validate(
-        spark, inp, stats=stats,
-        checkpoint_dir=str(tmp_path / "ck2"),
-        verdict_path=str(tmp_path / "v2"),
-        violation_path=str(tmp_path / "x2"))
-    q2.awaitTermination(120)
-
-    a = sorted(tuple(str(v) for v in r) for r in spark.read.parquet(
-        str(tmp_path / "v1")).drop("ingest_batch").collect())
-    b = sorted(tuple(str(v) for v in r) for r in spark.read.parquet(
-        str(tmp_path / "v2")).drop("batch_id").collect())
-    assert a == b
-
-
-def test_single_stage_faces_replay_without_duplicates(spark, tmp_path, stats):
-    """stream_validate and stream_drift write their sinks like the
-    pipeline: a full replay (wiped checkpoint, same files) leaves every
-    sink row-for-row identical instead of appending a second copy."""
-    from autoprepad_spark.datagen import generate_tokens
-    from autoprepad_spark.operators.drift import ntok_histogram
-    from autoprepad_spark.streaming.validate import stream_drift, stream_validate
-
-    p = {k: str(tmp_path / k) for k in ("inp", "ck_v", "ck_d", "verd", "viol", "drift")}
-    for seed in (31, 32):  # two files -> two batches at one file per trigger
-        generate_tokens(spark, 2_000, seed=seed, n_parts=2).coalesce(1).write.mode(
-            "append").parquet(p["inp"])
-    baseline = ntok_histogram(generate_tokens(spark, 2_000, seed=30, n_parts=2))
-
-    def drain():
-        stream_validate(spark, p["inp"], stats=stats, checkpoint_dir=p["ck_v"],
-                        verdict_path=p["verd"], violation_path=p["viol"],
-                        max_files_per_trigger=1).awaitTermination(120)
-        stream_drift(spark, p["inp"], baseline_hist=baseline, checkpoint_dir=p["ck_d"],
-                     drift_path=p["drift"], max_files_per_trigger=1).awaitTermination(120)
-
-    def snapshot():
-        return {k: sorted(tuple(str(v) for v in r)
-                          for r in spark.read.parquet(p[k]).collect())
-                for k in ("verd", "viol", "drift")}
-
-    drain()
-    before = snapshot()
-    for k in ("verd", "viol", "drift"):
-        assert {r["batch_id"] for r in spark.read.parquet(p[k]).collect()} == {0, 1}
-    shutil.rmtree(p["ck_v"])
-    shutil.rmtree(p["ck_d"])
-    drain()
-    assert snapshot() == before
 
 
 def _jobs(spark, skip=frozenset()):

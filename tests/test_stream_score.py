@@ -1,7 +1,7 @@
-"""Streaming anomaly scoring (streaming/score.py): batch-fitted PCA
-model applied to a parquet file stream — parity with the batch scorer,
-thresholded alerting, checkpointed no-reprocessing, and incremental
-drains of newly arrived files.
+"""Streaming anomaly scoring (a score-only ``stream_pipeline``):
+batch-fitted PCA model applied to a parquet file stream — parity with
+the batch scorer, thresholded alerting, checkpointed no-reprocessing,
+and incremental drains of newly arrived files.
 """
 
 from __future__ import annotations
@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from autoprepad_spark.operators import spectral as SP
-from autoprepad_spark.streaming.score import stream_score
+from autoprepad_spark.streaming.pipeline import ScoreStage, stream_pipeline
 
 DIM = 8
 SCHEMA = "vec_id long, embedding array<double>"
@@ -32,6 +32,12 @@ def _cloud(n, seed, outliers=0):
     for i in range(outliers):
         pts[n - 1 - i] += 20.0 * _BASIS[:, -1]
     return pts
+
+
+def _score_stream(spark, inp, *, schema, checkpoint_dir, **stage):
+    """A score-only pipeline; ``stage`` holds the ScoreStage fields."""
+    return stream_pipeline(spark, inp, schema=schema, checkpoint_dir=checkpoint_dir,
+                           score=ScoreStage(**stage))
 
 
 def _df(spark, vecs, id0=0):
@@ -62,7 +68,7 @@ def test_stream_score_matches_batch_and_alerts(spark, tmp_path):
         scored_path=str(tmp_path / "scored"),
         alert_path=str(tmp_path / "alerts"),
     )
-    q = stream_score(
+    q = _score_stream(
         spark, inp, schema=SCHEMA,
         score=SP.pca_score_udf(model)(F.col("embedding")),
         threshold=threshold, keep_cols=["vec_id"], **paths,
@@ -71,7 +77,7 @@ def test_stream_score_matches_batch_and_alerts(spark, tmp_path):
 
     scored = spark.read.parquet(paths["scored_path"])
     assert scored.count() == 100
-    assert set(scored.columns) == {"vec_id", "anomaly_score", "batch_id"}
+    assert set(scored.columns) == {"vec_id", "anomaly_score", "ingest_batch"}
     # parity with the batch expression (same model, same rows)
     batch = {
         r["vec_id"]: r["s"]
@@ -87,7 +93,7 @@ def test_stream_score_matches_batch_and_alerts(spark, tmp_path):
     assert {r["vec_id"] for r in alerts.collect()} == {1097, 1098, 1099}
 
     # re-drain with no new files: checkpoint prevents reprocessing
-    q2 = stream_score(
+    q2 = _score_stream(
         spark, inp, schema=SCHEMA,
         score=SP.pca_score_udf(model)(F.col("embedding")),
         threshold=threshold, keep_cols=["vec_id"], **paths,
@@ -97,7 +103,7 @@ def test_stream_score_matches_batch_and_alerts(spark, tmp_path):
 
     # new clean files arrive -> scored, no new alerts
     _df(spark, _cloud(50, seed=3), id0=2000).write.mode("append").parquet(inp)
-    q3 = stream_score(
+    q3 = _score_stream(
         spark, inp, schema=SCHEMA,
         score=SP.pca_score_udf(model)(F.col("embedding")),
         threshold=threshold, keep_cols=["vec_id"], **paths,
@@ -109,7 +115,7 @@ def test_stream_score_matches_batch_and_alerts(spark, tmp_path):
 
 def test_stream_score_guards(spark, tmp_path):
     with pytest.raises(ValueError, match="set together"):
-        stream_score(
+        _score_stream(
             spark, str(tmp_path / "x"), schema=SCHEMA,
             score=F.lit(0.0), threshold=1.0, alert_path=None,
             checkpoint_dir=str(tmp_path / "c"),
@@ -118,7 +124,7 @@ def test_stream_score_guards(spark, tmp_path):
 
 
 def test_stream_score_replay_overwrites_not_duplicates(spark, tmp_path):
-    """Crash-replay semantics: sinks are hive-partitioned by batch_id
+    """Crash-replay semantics: sinks are hive-partitioned by ingest_batch
     with dynamic partition overwrite, so reprocessing the same files
     (checkpoint lost = worst case) REPLACES each batch partition
     instead of appending duplicates."""
@@ -133,7 +139,7 @@ def test_stream_score_replay_overwrites_not_duplicates(spark, tmp_path):
     )
     model = SP.fit_pca(_df(spark, _cloud(200, seed=1)), k=2, dim=DIM)
     for _ in range(2):
-        q = stream_score(
+        q = _score_stream(
             spark, inp, schema=SCHEMA,
             score=SP.pca_score_udf(model)(F.col("embedding")),
             keep_cols=["vec_id"], **paths,
@@ -148,7 +154,7 @@ def test_stream_score_empty_keep_cols_means_no_passthrough(spark, tmp_path):
     inp = str(tmp_path / "in")
     _df(spark, _cloud(10, seed=6)).write.mode("overwrite").parquet(inp)
     model = SP.fit_pca(_df(spark, _cloud(50, seed=1)), k=2, dim=DIM)
-    q = stream_score(
+    q = _score_stream(
         spark, inp, schema=SCHEMA,
         score=SP.pca_score_udf(model)(F.col("embedding")),
         keep_cols=[], checkpoint_dir=str(tmp_path / "c"),
@@ -156,5 +162,5 @@ def test_stream_score_empty_keep_cols_means_no_passthrough(spark, tmp_path):
     )
     q.awaitTermination(120)
     out = spark.read.parquet(str(tmp_path / "s"))
-    assert set(out.columns) == {"anomaly_score", "batch_id"}
+    assert set(out.columns) == {"anomaly_score", "ingest_batch"}
     assert out.count() == 10

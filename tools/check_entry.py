@@ -8,12 +8,14 @@ Usage: python tools/check_entry.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script sits in, whatever the working directory
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as E  # noqa: E402
 from autoprepad_spark.session import get_spark  # noqa: E402
@@ -87,7 +89,7 @@ def main() -> int:
             print(f"FAIL  {name}: {'; '.join(problems)}")
             failures += 1
         else:
-            print(f"OK    {name}: {len(sdf)} rows")
+            print(f"OK    {name}: {len(sdf)} rows, value hash {hs}")
     print(f"\n{failures} failures")
     return 1 if failures else 0
 
