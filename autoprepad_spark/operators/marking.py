@@ -239,6 +239,93 @@ def _native_flag_cols(stats: ProfileStats, vocab_size: int) -> dict[str, Column]
     return cols
 
 
+def _unpack_flags() -> list[Column]:
+    """The packed ``_flags`` bitmask as one 0/1 column per ROW_CHECKS
+    entry (bit i = ROW_CHECKS[i], see ``_pack_flags``)."""
+    return [
+        F.shiftright("_flags", i).bitwiseAND(F.lit(1)).alias(f)
+        for i, f in enumerate(FLAG_COLS)
+    ]
+
+
+def _ref_flag(allowed_sources: list[str]) -> Column:
+    return (
+        F.col("source").isNotNull() & ~F.col("source").isin(*allowed_sources)
+    ).cast("int").alias(REF_FLAG)
+
+
+@dataclass(frozen=True, eq=False)
+class SlimMarker:
+    """``mark_slim`` as three prebuilt projections: ``reduce`` (the JVM
+    token-array reductions plus custom checks), ``flag`` (the Arrow flag
+    UDF and the referential flag) and ``unpack`` (the flag bits and
+    ``flag_total``). Applying it builds no expression, so a streaming
+    query builds one per query and applies it to every batch.
+    ``columns`` names the marked frame's columns."""
+
+    reduce: list[Column]
+    flag: list[Column]
+    unpack: list[Column]
+    columns: list[str]
+
+    def __call__(self, df: DataFrame) -> DataFrame:
+        return df.select(*self.reduce).select(*self.flag).select(*self.unpack)
+
+
+def slim_marker(
+    stats: ProfileStats,
+    *,
+    vocab_size: int = VOCAB_SIZE,
+    allowed_sources: list[str] | None = None,
+    custom: list[CustomCheck] | None = None,
+) -> SlimMarker:
+    """Build ``mark_slim``'s projections once; see ``mark_slim``."""
+    custom = validate_custom_checks(custom)
+    custom_cols = []
+    custom_keep = [f"f_{c.name}" for c in custom]
+    for c in custom:
+        custom_cols.append(c.flag_col().alias(f"f_{c.name}"))
+        d = c.detail_col()
+        if d is not None:
+            custom_cols.append(d.alias(f"_d_{c.name}"))
+            custom_keep.append(f"_d_{c.name}")
+    reduce = [
+        F.col("part"),
+        F.col("doc_id"),
+        F.col("n_tok"),
+        F.col("source"),
+        F.isnull("doc_id").alias("_dn"),
+        F.coalesce(F.size("tokens"), F.lit(-1)).cast("long").alias("_len"),
+        F.array_min("tokens").cast("double").alias("_tmin"),
+        F.array_max("tokens").cast("double").alias("_tmax"),
+        F.col("n_tok").cast("double").alias("_ntd"),
+        *custom_cols,
+    ]
+    keep = ["part", "doc_id", "n_tok", "source", "_len", "_tmin", "_tmax",
+            *custom_keep]
+    ref = []
+    flag = [F.col(c) for c in keep]
+    if allowed_sources is not None:
+        ref.append(REF_FLAG)
+        flag.append(_ref_flag(allowed_sources))
+    udf = _arrow_array_flag_udf(stats, vocab_size)
+    flag.append(udf("_dn", "_len", "_tmin", "_tmax", "_ntd").alias("_flags"))
+    # the built-in flags are the 0/1 bits of _flags, so their sum is its
+    # popcount; the custom and referential flags are added to it
+    total = F.bit_count("_flags")
+    for f in [f"f_{c.name}" for c in custom] + ref:
+        total = total + F.col(f)
+    unpack = [
+        *[F.col(c) for c in keep],
+        *_unpack_flags(),
+        *[F.col(c) for c in ref],
+        total.cast("int").alias("flag_total"),
+    ]
+    return SlimMarker(
+        reduce, flag, unpack, keep + FLAG_COLS + ref + ["flag_total"]
+    )
+
+
 def mark_slim(
     df: DataFrame,
     stats: ProfileStats,
@@ -275,58 +362,10 @@ def mark_slim(
     like the other diagnostics, so ``tokens`` is still pruned out of
     the python exchange.
     """
-    custom = validate_custom_checks(custom)
-    custom_cols = []
-    for c in custom:
-        custom_cols.append(c.flag_col().alias(f"f_{c.name}"))
-        d = c.detail_col()
-        if d is not None:
-            custom_cols.append(d.alias(f"_d_{c.name}"))
-    slim = df.select(
-        "part",
-        "doc_id",
-        "n_tok",
-        "source",
-        F.isnull("doc_id").alias("_dn"),
-        F.coalesce(F.size("tokens"), F.lit(-1)).cast("long").alias("_len"),
-        F.array_min("tokens").cast("double").alias("_tmin"),
-        F.array_max("tokens").cast("double").alias("_tmax"),
-        F.col("n_tok").cast("double").alias("_ntd"),
-        *custom_cols,
-    )
-    udf = _arrow_array_flag_udf(stats, vocab_size)
-    custom_names = [f.name for f in custom]
-    custom_keep = [f"f_{n}" for n in custom_names] + [
-        f"_d_{n}" for n in custom_names if f"_d_{n}" in slim.columns
-    ]
-    out = slim.select(
-        "part",
-        "doc_id",
-        "n_tok",
-        "source",
-        "_len",
-        "_tmin",
-        "_tmax",
-        *custom_keep,
-        udf("_dn", "_len", "_tmin", "_tmax", "_ntd").alias("_flags"),
-    )
-    for i, f in enumerate(FLAG_COLS):
-        out = out.withColumn(f, F.shiftright("_flags", i).bitwiseAND(F.lit(1)))
-    out = out.drop("_flags")
-    flag_cols = list(FLAG_COLS) + [f"f_{n}" for n in custom_names]
-    if allowed_sources is not None:
-        out = out.withColumn(
-            REF_FLAG,
-            (
-                F.col("source").isNotNull()
-                & ~F.col("source").isin(*allowed_sources)
-            ).cast("int"),
-        )
-        flag_cols.append(REF_FLAG)
-    total = None
-    for f in flag_cols:
-        total = F.col(f) if total is None else total + F.col(f)
-    return out.withColumn("flag_total", total.cast("int"))
+    return slim_marker(
+        stats, vocab_size=vocab_size, allowed_sources=allowed_sources,
+        custom=custom,
+    )(df)
 
 
 def mark(
@@ -370,9 +409,7 @@ def mark(
                 F.col("n_tok").cast("double"),
             ),
         )
-        for i, f in enumerate(FLAG_COLS):
-            out = out.withColumn(f, F.shiftright("_flags", i).bitwiseAND(F.lit(1)))
-        out = out.drop("_flags")
+        out = out.select("*", *_unpack_flags()).drop("_flags")
     elif engine == "native":
         out = df
         for name, col in _native_flag_cols(stats, vocab_size).items():
@@ -387,13 +424,7 @@ def mark(
             out = out.withColumn(f"_d_{c.name}", d)
         flag_cols.append(f"f_{c.name}")
     if allowed_sources is not None:
-        out = out.withColumn(
-            REF_FLAG,
-            (
-                F.col("source").isNotNull()
-                & ~F.col("source").isin(*allowed_sources)
-            ).cast("int"),
-        )
+        out = out.select("*", _ref_flag(allowed_sources))
         flag_cols.append(REF_FLAG)
     # Row-wise horizontal sum (TukeyTransformerTotal.py:25-36 analog).
     total = None

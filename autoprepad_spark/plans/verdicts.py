@@ -18,11 +18,20 @@ re-running the marking UDF for the aggregation. The (part x check) grid
 is densified by exploding a literal array of check names onto the
 row-count rows — a JVM projection, no cross join and no Python-built
 frame.
+
+A stream batch is small enough to cache marked, so its verdicts skip the
+violation set: ``flag_count_verdicts`` sums each check's flag per
+partition in the same aggregation that counts the rows. Both paths
+judge with one projection (``_judge``). ``violation_exploder`` and
+``flag_count_verdicts`` make their Columns once and return functions
+that only apply them, so a streaming query makes them once per query.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, functions as F
 
 from autoprepad_spark.operators.marking import FLAG_COLS, REF_CHECK, REF_FLAG, ROW_CHECKS
 
@@ -40,6 +49,64 @@ HARD_CHECKS = {
 STAT_MAX_RATE = 0.1
 
 
+def violation_exploder(
+    columns: list[str], include: set[str] | None = None
+) -> Callable[[DataFrame], DataFrame]:
+    """``explode_violations`` for marked frames with these ``columns``,
+    its Columns built once: the returned function only applies them."""
+    ntd = F.col("n_tok").cast("string")
+    details = {}
+    if "_len" in columns:
+        len_detail = F.concat_ws(":", ntd, F.col("_len").cast("string"))
+        details["len_mismatch"] = len_detail
+        details["empty_tokens"] = len_detail
+        details["token_oob"] = F.concat_ws(
+            ":",
+            F.col("_tmin").cast("long").cast("string"),
+            F.col("_tmax").cast("long").cast("string"),
+        )
+    checks = [
+        (name, flag, details.get(name, ntd))
+        for name, flag in zip(ROW_CHECKS, FLAG_COLS)
+    ]
+    if REF_FLAG in columns:
+        checks.append((REF_CHECK, REF_FLAG, F.col("source")))
+    # custom checks ride the marking pass as f_<name> (+ optional
+    # _d_<name> detail) columns — auto-discovered here by convention,
+    # so the explode needs no side-channel check registry
+    known = set(FLAG_COLS) | {REF_FLAG}
+    for col in columns:
+        if col.startswith("f_") and col not in known:
+            name = col[2:]
+            detail = F.col(f"_d_{name}") if f"_d_{name}" in columns else ntd
+            checks.append((name, col, detail))
+    if include is not None:
+        checks = [c for c in checks if c[0] in include]
+    pairs = F.array(
+        *[
+            F.struct(
+                F.lit(name).alias("check_name"),
+                F.col(flag).alias("v"),
+                detail.alias("detail"),
+            )
+            for name, flag, detail in checks
+        ]
+    )
+    flagged = F.col("flag_total") > 0
+    hit = [
+        F.col("part"),
+        F.explode(F.filter(pairs, lambda s: s["v"] == 1)).alias("_h"),
+        F.col("doc_id"),
+    ]
+    flat = [
+        F.col("part"),
+        F.col("_h.check_name").alias("check_name"),
+        F.col("doc_id"),
+        F.col("_h.detail").alias("detail"),
+    ]
+    return lambda marked: marked.filter(flagged).select(*hit).select(*flat)
+
+
 def explode_violations(marked: DataFrame, include: set[str] | None = None) -> DataFrame:
     """Marked rows -> one violation row per (row, violated check).
 
@@ -54,59 +121,35 @@ def explode_violations(marked: DataFrame, include: set[str] | None = None) -> Da
     which is what keeps the token payload out of the python-exchange
     queue — see mark_slim.)
     """
-    ntd = F.col("n_tok").cast("string")
-    details = {}
-    if "_len" in marked.columns:
-        len_detail = F.concat_ws(":", ntd, F.col("_len").cast("string"))
-        details["len_mismatch"] = len_detail
-        details["empty_tokens"] = len_detail
-        details["token_oob"] = F.concat_ws(
-            ":",
-            F.col("_tmin").cast("long").cast("string"),
-            F.col("_tmax").cast("long").cast("string"),
+    return violation_exploder(marked.columns, include)(marked)
+
+
+def _judge(
+    stat_max_rate: float = STAT_MAX_RATE,
+    hard_checks: set[str] | None = None,
+    stat_rates: dict[str, float] | None = None,
+) -> list[Column]:
+    """The verdict projection over (part, check_name, violation_count,
+    row_count) rows: the hard checks fail on any violation, the others
+    when the violation rate exceeds their ceiling."""
+    rate = F.col("violation_count") / F.greatest(F.col("row_count"), F.lit(1))
+    is_hard = F.col("check_name").isin(*sorted(hard_checks or HARD_CHECKS))
+    ceiling = F.lit(stat_max_rate)
+    for name, r in sorted((stat_rates or {}).items()):
+        ceiling = F.when(F.col("check_name") == name, F.lit(float(r))).otherwise(
+            ceiling
         )
-    checks = [
-        (name, flag, details.get(name, ntd))
-        for name, flag in zip(ROW_CHECKS, FLAG_COLS)
+    status = F.when(
+        is_hard, F.when(F.col("violation_count") > 0, "fail").otherwise("pass")
+    ).otherwise(F.when(rate > ceiling, "fail").otherwise("pass"))
+    return [
+        F.col("part"),
+        F.col("check_name"),
+        status.alias("status"),
+        rate.cast("double").alias("metric"),
+        F.col("violation_count").cast("long"),
+        F.col("row_count").cast("long"),
     ]
-    if REF_FLAG in marked.columns:
-        checks.append((REF_CHECK, REF_FLAG, F.col("source")))
-    # custom checks ride the marking pass as f_<name> (+ optional
-    # _d_<name> detail) columns — auto-discovered here by convention,
-    # so the explode needs no side-channel check registry
-    known = set(FLAG_COLS) | {REF_FLAG}
-    for col in marked.columns:
-        if col.startswith("f_") and col not in known:
-            name = col[2:]
-            detail = (
-                F.col(f"_d_{name}")
-                if f"_d_{name}" in marked.columns
-                else ntd
-            )
-            checks.append((name, col, detail))
-    if include is not None:
-        checks = [c for c in checks if c[0] in include]
-    pairs = F.array(
-        *[
-            F.struct(
-                F.lit(name).alias("check_name"),
-                F.col(flag).alias("v"),
-                detail.alias("detail"),
-            )
-            for name, flag, detail in checks
-        ]
-    )
-    hit = F.filter(pairs, lambda s: s["v"] == 1)
-    return (
-        marked.filter(F.col("flag_total") > 0)
-        .select("part", F.explode(hit).alias("_h"), "doc_id")
-        .select(
-            "part",
-            F.col("_h.check_name").alias("check_name"),
-            "doc_id",
-            F.col("_h.detail").alias("detail"),
-        )
-    )
 
 
 def assemble_verdicts(
@@ -127,34 +170,56 @@ def assemble_verdicts(
     stat_rates: per-check overrides of the statistical ceiling (from
     CustomCheck.stat_max_rate) — a when-chain over a handful of names,
     so the verdict expression stays pure codegen.
+
+    The counts join the grid null-safely on ``part``: a null partition
+    key is a partition of its own, and its violations count.
     """
     names = F.array(*[F.lit(c) for c in check_names]).cast("array<string>")
     grid = row_counts.select(
         "part", "row_count", F.explode(names).alias("check_name")
-    )
+    ).alias("g")
     counts = violations.groupBy("part", "check_name").agg(
         F.count(F.lit(1)).alias("violation_count")
+    ).alias("c")
+    merged = grid.join(
+        counts,
+        F.col("g.part").eqNullSafe(F.col("c.part"))
+        & (F.col("g.check_name") == F.col("c.check_name")),
+        "left",
+    ).select(
+        F.col("g.part").alias("part"),
+        F.col("g.check_name").alias("check_name"),
+        F.coalesce(F.col("c.violation_count"), F.lit(0)).alias("violation_count"),
+        F.col("g.row_count").alias("row_count"),
     )
-    merged = grid.join(counts, ["part", "check_name"], "left").fillna(
-        {"violation_count": 0}
-    )
-    rate = F.col("violation_count") / F.greatest(F.col("row_count"), F.lit(1))
-    is_hard = F.col("check_name").isin(*sorted(hard_checks or HARD_CHECKS))
-    ceiling = F.lit(stat_max_rate)
-    for name, r in sorted((stat_rates or {}).items()):
-        ceiling = F.when(F.col("check_name") == name, F.lit(float(r))).otherwise(
-            ceiling
-        )
-    status = F.when(
-        is_hard, F.when(F.col("violation_count") > 0, "fail").otherwise("pass")
-    ).otherwise(F.when(rate > ceiling, "fail").otherwise("pass"))
-    return merged.select(
-        "part",
-        "check_name",
-        status.alias("status"),
-        rate.cast("double").alias("metric"),
-        F.col("violation_count").cast("long"),
-        F.col("row_count").cast("long"),
+    return merged.select(*_judge(stat_max_rate, hard_checks, stat_rates))
+
+
+def flag_count_verdicts(check_names: list[str]) -> Callable[[DataFrame], DataFrame]:
+    """Verdicts straight from a marked frame, its Columns built once:
+    ONE ``groupBy("part")`` aggregation gives each partition's row count
+    and, per check, the sum of its ``f_<check>`` flag, which is the
+    number of violation rows ``explode_violations`` emits for it. The
+    (part x check) grid is an explode of those sums, and the judging
+    projection is ``assemble_verdicts``' with its default rule. A null
+    ``part`` is one group, like any other."""
+    aggs = [F.count(F.lit(1)).alias("row_count")] + [
+        F.sum(f"f_{c}").alias(f"_n{i}") for i, c in enumerate(check_names)
+    ]
+    grid = [
+        F.col("part"),
+        F.col("row_count"),
+        F.inline(F.array(*[
+            F.struct(
+                F.lit(c).alias("check_name"),
+                F.col(f"_n{i}").alias("violation_count"),
+            )
+            for i, c in enumerate(check_names)
+        ])),
+    ]
+    judge = _judge()
+    return lambda marked: (
+        marked.groupBy("part").agg(*aggs).select(*grid).select(*judge)
     )
 
 

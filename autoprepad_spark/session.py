@@ -224,6 +224,11 @@ def get_spark(
         # extra_conf={"spark.python.sql.dataFrameDebugging.enabled":
         # "true"} to get the call-site fragment back.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Spark keeps 100 compiled classes by default. One dedup stream
+        # trigger plans ~130 distinct classes, so that cache evicts ~80
+        # of them before the next trigger asks for them again, and each
+        # warm 4-row trigger spent ~0.5-1 s recompiling them
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # files.maxPartitionBytes default 128m is right for the 100TB target;
         # keep it explicit so the intent is visible.
         .config("spark.sql.files.maxPartitionBytes", "134217728")

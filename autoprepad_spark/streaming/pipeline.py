@@ -17,10 +17,18 @@ DedupStage / ValidateStage / ScoreStage / DriftStage:
   current batch's own partition excluded) feeds the other stages, so
   dropped rows never reach the validators;
 * EVERY sink (kept / dropped / index / verdicts / violations / scored /
-  alerts / drift) is written by ``_sink``: hive-partitioned by
-  ``ingest_batch`` with dynamic partition OVERWRITE, so a batch
+  alerts / drift) is written by ``_sink`` straight into its
+  ``<path>/ingest_batch=<id>`` directory, replacing it, so a batch
   replayed after a crash between any sink write and the checkpoint
-  commit overwrites its own partitions instead of duplicating rows;
+  commit replaces its own directories instead of duplicating rows, and
+  the sinks read back hive-partitioned by ``ingest_batch``;
+* nothing a trigger plans depends on the batch id or is rebuilt per
+  trigger: the sinks carry no batch literal, the dedup stage reads the
+  index's other partitions by path, the validate stage's Columns
+  (marking, explode, verdict rule) are built once when the query
+  starts and the drift baseline is collected then too. A warm
+  trigger's plans therefore hit Spark's codegen cache and compile
+  nothing;
 * the validate, score and drift stages, and within them the
   violations and verdicts sinks and the scored and alerts sinks, are
   written CONCURRENTLY (``_concurrently``). A small file's batch makes
@@ -41,9 +49,11 @@ need the state store (windowed profiles, running totals, watermarked
 exact dedup) live in ``streaming/validate.py``.
 
 Scale shape: dedup exchanges O(|batch|) signature rows against a
-partition-pruned index, marking is a pure Arrow/codegen map, scoring a
-stateless projection, drift one |sources| x |buckets| aggregation;
-composing them adds no pass over the batch beyond the one cache.
+partition-pruned index, marking is a pure Arrow/codegen map whose slim
+output is cached once for the violations and verdicts sinks (verdict
+counts are one groupBy(part) over its flags), scoring a stateless
+projection, drift one |sources| x |buckets| aggregation; composing them
+adds no pass over the batch beyond the one cache.
 """
 
 from __future__ import annotations
@@ -55,7 +65,7 @@ from pyspark import InheritableThread
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
 
 from autoprepad_spark.operators import drift as D
-from autoprepad_spark.operators.marking import mark_slim
+from autoprepad_spark.operators.marking import slim_marker
 from autoprepad_spark.operators.profile import ProfileStats
 from autoprepad_spark.plans import verdicts as V
 from autoprepad_spark.plans.suite import ALL_CHECKS, allowed_sources
@@ -92,7 +102,9 @@ class ValidateStage:
     with the TRAIN stats (the reference's fit-then-predict split),
     writing violation rows and per-(batch, part) verdicts. Uniqueness
     is excluded (a global property cannot be decided on a file
-    subset), and ref_source is checked only when ``dim`` is given."""
+    subset), and ref_source is checked only when ``dim`` is given (its
+    allowed set is collected when the query starts). Rows without a
+    ``part`` form one verdict group of their own."""
 
     stats: ProfileStats
     verdict_path: str
@@ -128,10 +140,12 @@ class ScoreStage:
 @dataclass(frozen=True)
 class DriftStage:
     """Per-batch distribution drift: each batch's per-source n_tok
-    histogram is compared against the checkpointed baseline histogram
-    (PSI + chi², the batch drift operator), one row per (batch,
-    source). The state is only the |sources| x |buckets| histogram, so
-    batch size does not change the memory footprint."""
+    histogram is compared against the baseline histogram (PSI + chi²,
+    the batch drift operator), one row per (batch, source). The
+    baseline is collected once, when the query starts, and is scored
+    against every batch on the driver. The state is only the
+    |sources| x |buckets| histogram, so batch size does not change the
+    memory footprint."""
 
     baseline_hist: DataFrame
     drift_path: str
@@ -139,16 +153,20 @@ class DriftStage:
 
 
 def _sink(df: DataFrame, path: str, batch_id: int) -> None:
-    """The streaming-wide idempotent sink: dynamic partition overwrite
-    keyed on ``ingest_batch``, so a replayed batch replaces its own
-    partition (metadata-level) and never duplicates it."""
-    (
-        df.withColumn("ingest_batch", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ingest_batch")
-        .parquet(path)
-    )
+    """The streaming-wide idempotent sink: ``df`` replaces the directory
+    ``<path>/ingest_batch=<batch_id>``. Read back from ``path``,
+    partition discovery adds the int column ``ingest_batch``: the
+    layout, schema and rows of a hive-partitioned write. No plan
+    carries the batch id, so every batch's write plans the same code.
+
+    A replay always replaces its partition, even when the new result is
+    empty: an empty result leaves the directory holding one empty file,
+    so every batch has a partition in every sink. The write deletes the
+    directory and then writes it (not a staged rename), so a crash in
+    between leaves the batch's partition missing or partial; that is
+    safe because the batch is not committed and is replayed."""
+    df.write.mode("overwrite").parquet(
+        f"{path.rstrip('/')}/ingest_batch={batch_id}")
 
 
 def seed_index(index: DataFrame, index_path: str) -> None:
@@ -178,14 +196,16 @@ def _dedup_batch(
         T.StructField("content_hash", T.LongType()),
         T.StructField("sig", T.ArrayType(T.LongType())),
     ])
-    if any(
-        d.startswith("ingest_batch=") for d in list_names(spark, cfg.index_path)
-    ):
-        idx = (
-            spark.read.parquet(cfg.index_path)
-            .filter(F.col("ingest_batch") != batch_id)
-            .select(*INC.INDEX_COLS)
-        )
+    # every partition but this batch's own (a replay's first attempt),
+    # read by path: a filter on ingest_batch would put the batch id in
+    # the plan
+    history = [
+        f"{cfg.index_path.rstrip('/')}/{d}"
+        for d in sorted(list_names(spark, cfg.index_path))
+        if d.startswith("ingest_batch=") and d != f"ingest_batch={batch_id}"
+    ]
+    if history:
+        idx = spark.read.schema(index_schema).parquet(*history)
     else:
         idx = spark.createDataFrame([], index_schema)
 
@@ -265,28 +285,32 @@ def _concurrently(*thunks: Callable[[], None]) -> None:
             raise e
 
 
-def _validate_batch(
-    cfg: ValidateStage,
-    allowed: list[str] | None,
-    df: DataFrame,
-    batch_id: int,
-) -> None:
+def _validate_batch(cfg: ValidateStage) -> Callable[[DataFrame, int], None]:
+    """A ValidateStage's per-batch body. Its Columns (the slim marking,
+    the violation explode and the flag-count verdicts) are built here,
+    once per query; the returned ``(df, batch_id)`` function applies
+    them to the batch, caches the marked frame and writes the
+    violations and verdicts sinks from it concurrently."""
     kwargs = {} if cfg.vocab_size is None else {"vocab_size": cfg.vocab_size}
-    marked = mark_slim(df, cfg.stats, allowed_sources=allowed, **kwargs)
-    viol = V.explode_violations(marked).cache()
-    try:
-        row_counts = df.groupBy("part").agg(
-            F.count(F.lit(1)).alias("row_count"))
-        checks = [c for c in ALL_CHECKS if c != "unique_doc_id"]
-        if cfg.dim is None:
-            checks = [c for c in checks if c != "ref_source"]
-        verd = V.assemble_verdicts(row_counts, viol, checks)
-        _concurrently(
-            lambda: _sink(viol, cfg.violation_path, batch_id),
-            lambda: _sink(verd, cfg.verdict_path, batch_id),
-        )
-    finally:
-        viol.unpersist()
+    allowed = None if cfg.dim is None else allowed_sources(cfg.dim)
+    mark = slim_marker(cfg.stats, allowed_sources=allowed, **kwargs)
+    explode = V.violation_exploder(mark.columns)
+    checks = [c for c in ALL_CHECKS if c != "unique_doc_id"]
+    if cfg.dim is None:
+        checks = [c for c in checks if c != "ref_source"]
+    verdicts = V.flag_count_verdicts(checks)
+
+    def run(df: DataFrame, batch_id: int) -> None:
+        marked = mark(df).cache()
+        try:
+            _concurrently(
+                lambda: _sink(explode(marked), cfg.violation_path, batch_id),
+                lambda: _sink(verdicts(marked), cfg.verdict_path, batch_id),
+            )
+        finally:
+            marked.unpersist()
+
+    return run
 
 
 def _score_batch(cfg: ScoreStage, df: DataFrame, batch_id: int) -> None:
@@ -308,9 +332,12 @@ def _score_batch(cfg: ScoreStage, df: DataFrame, batch_id: int) -> None:
         _sink(out, cfg.scored_path, batch_id)
 
 
-def _drift_batch(cfg: DriftStage, df: DataFrame, batch_id: int) -> None:
-    cur = D.ntok_histogram(df, bucket_width=cfg.bucket_width)
-    _sink(D.drift(cfg.baseline_hist, cur), cfg.drift_path, batch_id)
+def _drift_batch(
+    cfg: DriftStage, baseline: list, df: DataFrame, batch_id: int
+) -> None:
+    cur = D.collect_histogram(D.ntok_histogram(df, bucket_width=cfg.bucket_width))
+    _sink(D.drift_from_counts(df.sparkSession, baseline, cur),
+          cfg.drift_path, batch_id)
 
 
 def stream_pipeline(
@@ -347,18 +374,18 @@ def stream_pipeline(
         .parquet(input_path)
     )
 
-    allowed = None
-    if validate is not None and validate.dim is not None:
-        allowed = allowed_sources(validate.dim)
+    # what does not change while the query runs is built once
+    validate_batch = None if validate is None else _validate_batch(validate)
+    baseline = None if drift is None else D.collect_histogram(drift.baseline_hist)
 
     def tail_stages(df: DataFrame, batch_id: int) -> None:
         stages = []
         if validate is not None:
-            stages.append(lambda: _validate_batch(validate, allowed, df, batch_id))
+            stages.append(lambda: validate_batch(df, batch_id))
         if score is not None:
             stages.append(lambda: _score_batch(score, df, batch_id))
         if drift is not None:
-            stages.append(lambda: _drift_batch(drift, df, batch_id))
+            stages.append(lambda: _drift_batch(drift, baseline, df, batch_id))
         if stages:
             _concurrently(*stages)
 

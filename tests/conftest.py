@@ -27,3 +27,10 @@ def dim_df(spark):
     from autoprepad_spark.datagen import source_dim
 
     return source_dim(spark)
+
+
+def codegen_compiles(spark) -> int:
+    """Classes Janino has compiled in this JVM so far: count them around
+    a call to see whether it planned any code the cache did not hold."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()

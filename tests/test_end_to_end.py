@@ -132,3 +132,46 @@ def test_profile_matches_numpy_oracle(spark, tokens_df):
     assert stats.q3_n_tok == pytest.approx(np.quantile(nt, 0.75))
     med = np.quantile(nt, 0.5)
     assert stats.mad_n_tok == pytest.approx(np.quantile(np.abs(nt - med), 0.5))
+
+
+def _null_part_rows(spark):
+    """Two rows without a partition key, one of them without a doc_id
+    (a hard null_doc_id violation), beside one clean keyed row."""
+    rows = [(None, [1, 2, 3], 3, "web", None),
+            ("np-1", [1, 2, 3], 3, "web", None),
+            ("kp-1", [1, 2, 3], 3, "web", "p-000")]
+    return spark.createDataFrame(rows, TOKENS_SCHEMA)
+
+
+def test_suite_null_part_counts_its_violations(spark, tmp_path):
+    """A null ``part`` is a partition of its own: its hard violation
+    fails its verdict instead of vanishing in the verdict join."""
+    res = ValidationSuite().run(_null_part_rows(spark),
+                                violation_sink=str(tmp_path / "viol"))
+    got = {(r["part"], r["check_name"]): (r["status"], r["violation_count"], r["row_count"])
+           for r in res.verdicts.collect()}
+    assert got[(None, "null_doc_id")] == ("fail", 1, 2)
+    assert got[("p-000", "null_doc_id")] == ("pass", 0, 1)
+
+
+def test_flag_count_verdicts_match_assembled(spark, tokens_df, dim_df):
+    """The stream's one-aggregation verdicts equal the suite's verdicts
+    assembled from the violation set, null partition included."""
+    from autoprepad_spark.operators.marking import ROW_CHECKS, mark_slim
+    from autoprepad_spark.operators.profile import global_stats
+    from autoprepad_spark.plans import verdicts as V
+    from autoprepad_spark.plans.suite import allowed_sources
+
+    df = tokens_df.unionByName(_null_part_rows(spark))
+    marked = mark_slim(df, global_stats(tokens_df),
+                       allowed_sources=allowed_sources(dim_df)).cache()
+    checks = ROW_CHECKS + ["ref_source"]
+    row_counts = df.groupBy("part").agg(F.count(F.lit(1)).alias("row_count"))
+    want = V.assemble_verdicts(row_counts, V.explode_violations(marked), checks)
+    got = V.flag_count_verdicts(checks)(marked)
+    assert [(f.name, f.dataType) for f in got.schema] == [
+        (f.name, f.dataType) for f in want.schema]
+    rows = sorted(map(tuple, want.collect()), key=str)
+    assert sorted(map(tuple, got.collect()), key=str) == rows
+    assert any(r[0] is None and r[1] == "null_doc_id" and r[2] == "fail" for r in rows)
+    marked.unpersist()

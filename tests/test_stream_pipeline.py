@@ -5,12 +5,13 @@ Pins the three seams the single-stage tests cannot: (1) validators,
 scorer and drift see ONLY dedup survivors; (2) a full replay (fresh
 checkpoint, same files) leaves EVERY composed sink — kept, dropped,
 index, verdicts, violations, scored, alerts, drift — row-for-row
-identical (dynamic partition overwrite across the whole pipeline); (3)
-a restart with the checkpoint intact is a no-op until new files
-arrive, and then processes only them. It also pins the concurrent sink
-writes: they overlap, stay in the query's job group and scan the batch
-once, and a failing stage surfaces only after its sibling writes have
-returned.
+identical (each sink's batch partition is replaced); (3) a restart with
+the checkpoint intact is a no-op until new files arrive, and then
+processes only them. It also pins the concurrent sink writes: they
+overlap, stay in the query's job group and scan the batch once, and a
+failing stage surfaces only after its sibling writes have returned;
+and the per-trigger cost: a warm trigger runs at most 6 jobs, compiles
+no code and does not re-read the drift baseline.
 """
 
 from __future__ import annotations
@@ -22,6 +23,7 @@ import time
 
 import numpy as np
 import pytest
+from conftest import codegen_compiles
 from pyspark.sql import functions as F, types as T
 
 from autoprepad_spark.operators import incremental as INC
@@ -163,8 +165,8 @@ def test_composed_pipeline_and_replay(spark, paths, stats):
     assert drift == {(0, "web"): 2, (1, "web"): 2}
 
     # (2) FULL REPLAY: wipe the checkpoint, re-drain the same files —
-    # every composed sink must come out row-for-row identical (dynamic
-    # partition overwrite, same batch numbering from the fresh log)
+    # every composed sink must come out row-for-row identical (each
+    # batch partition replaced, same batch numbering from the fresh log)
     before = _snapshot(spark, paths)
     shutil.rmtree(paths["ckpt"])
     _drain(spark, paths, stats)
@@ -225,34 +227,47 @@ def _validate_score(stats, p, score=None):
     )
 
 
-def test_trigger_writes_sinks_concurrently(spark, tmp_path, stats):
-    """A trigger's four sink writes run at the same time, inside the
-    query's job group, and share one scan of the batch file."""
+def _trigger(spark, q, p, i, rows=2_000):
+    """Land generated file ``i`` in the query's inbox and wait for its
+    trigger; returns (the jobs it ran, the classes it compiled)."""
     from autoprepad_spark.datagen import generate_tokens
+
+    out = os.path.join(p["stage"], str(i))
+    generate_tokens(spark, rows, seed=40 + i, n_parts=2).coalesce(1).write.parquet(out)
+    (f,) = glob.glob(os.path.join(out, "*.parquet"))
+    seen = {j.jobId() for j in _jobs(spark)}
+    compiled = codegen_compiles(spark)
+    os.rename(f, os.path.join(p["inp"], f"f{i}.parquet"))
+    q.processAllAvailable()
+    return _jobs(spark, seen), codegen_compiles(spark) - compiled
+
+
+def _query(spark, p, **stages):
     from autoprepad_spark.schema import TOKENS_SCHEMA
 
+    os.makedirs(p["inp"])
+    return stream_pipeline(
+        spark, p["inp"], schema=TOKENS_SCHEMA, checkpoint_dir=p["ck"],
+        available_now=False, max_files_per_trigger=1, **stages,
+    )
+
+
+def test_trigger_writes_sinks_concurrently(spark, tmp_path, stats):
+    """A trigger's four sink writes run at the same time, inside the
+    query's job group, and share one scan of the batch file; a warm
+    trigger runs at most 6 jobs."""
     p = {k: str(tmp_path / k) for k in
          ("inp", "stage", "ck", "verd", "viol", "scored", "alerts")}
     rows = 2_000
-    os.makedirs(p["inp"])
-    q = stream_pipeline(
-        spark, p["inp"], schema=TOKENS_SCHEMA, checkpoint_dir=p["ck"],
-        available_now=False, max_files_per_trigger=1, **_validate_score(stats, p),
-    )
+    q = _query(spark, p, **_validate_score(stats, p))
     try:
         for i in range(2):  # the first trigger warms the query up
-            out = os.path.join(p["stage"], str(i))
-            generate_tokens(spark, rows, seed=40 + i, n_parts=2).coalesce(1).write.parquet(out)
-            (f,) = glob.glob(os.path.join(out, "*.parquet"))
-            seen = {j.jobId() for j in _jobs(spark)}
-            os.rename(f, os.path.join(p["inp"], f"f{i}.parquet"))
-            q.processAllAvailable()
-        jobs = _jobs(spark, seen)
+            jobs, _ = _trigger(spark, q, p, i, rows)
         group = str(q.runId)
     finally:
         q.stop()
 
-    assert jobs
+    assert 0 < len(jobs) <= 6, len(jobs)
     # every job the trigger ran inherited the query's job group
     assert all(j.jobGroup().isDefined() and j.jobGroup().get() == group for j in jobs)
     writes = [(j.submissionTime().get().getTime(), j.completionTime().get().getTime())
@@ -263,6 +278,62 @@ def test_trigger_writes_sinks_concurrently(spark, tmp_path, stats):
     # one stage scans the file; every other reads the caches
     scans = [s for j in jobs for s in _stages_of(spark, j) if s.inputRecords() == rows]
     assert len(scans) == 1
+
+
+def test_warm_trigger_compiles_nothing(spark, tmp_path, stats):
+    """A warm validate+score+drift trigger plans only code Spark has
+    already compiled: no plan carries the batch id, and the stages'
+    Columns are built when the query starts."""
+    from autoprepad_spark.datagen import generate_tokens
+
+    p = {k: str(tmp_path / k) for k in
+         ("inp", "stage", "ck", "verd", "viol", "scored", "alerts", "drift")}
+    baseline = ntok_histogram(generate_tokens(spark, 3_000, seed=3, n_parts=2))
+    q = _query(spark, p, drift=DriftStage(baseline, p["drift"]),
+               **_validate_score(stats, p))
+    try:
+        compiled = [_trigger(spark, q, p, i)[1] for i in range(3)]
+    finally:
+        q.stop()
+    assert compiled[1:] == [0, 0], compiled
+
+
+def test_drift_trigger_does_not_rescan_baseline(spark, tmp_path):
+    """The drift baseline is collected once, when the query starts: no
+    stage of a trigger reads the baseline table's rows."""
+    from autoprepad_spark.datagen import generate_tokens
+
+    p = {k: str(tmp_path / k) for k in ("inp", "stage", "ck", "drift", "base")}
+    base_rows = 3_000
+    generate_tokens(spark, base_rows, seed=3, n_parts=2).write.parquet(p["base"])
+    baseline = ntok_histogram(spark.read.parquet(p["base"]))
+    q = _query(spark, p, drift=DriftStage(baseline, p["drift"]))
+    try:
+        jobs = [j for i in range(2) for j in _trigger(spark, q, p, i)[0]]
+    finally:
+        q.stop()
+    assert jobs
+    assert not [s for j in jobs for s in _stages_of(spark, j)
+                if s.inputRecords() == base_rows]
+    drift = spark.read.parquet(p["drift"])
+    assert {r[0] for r in drift.select("ingest_batch").distinct().collect()} == {0, 1}
+
+
+def test_null_part_violations_fail_their_verdict(spark, paths, stats):
+    """Rows without a partition key form one verdict group whose hard
+    violations count: one null doc_id fails null_doc_id for it."""
+    rows = [_doc(None, "a", 3, None), _doc("n1", "b", 3, None), _doc("k1", "c", 3)]
+    spark.createDataFrame(rows, SCHEMA).coalesce(1).write.parquet(paths["inp"])
+    q = stream_pipeline(
+        spark, paths["inp"], schema=SCHEMA, checkpoint_dir=paths["ckpt"],
+        validate=ValidateStage(stats=stats, verdict_path=paths["verd"],
+                               violation_path=paths["viol"]),
+    )
+    q.awaitTermination(180)
+    got = {(r["part"], r["check_name"]): (r["status"], r["violation_count"], r["row_count"])
+           for r in spark.read.parquet(paths["verd"]).collect()}
+    assert got[(None, "null_doc_id")] == ("fail", 1, 2)
+    assert got[("p-0", "null_doc_id")] == ("pass", 0, 1)
 
 
 def test_failed_stage_waits_for_siblings_and_replays(spark, tmp_path, stats):

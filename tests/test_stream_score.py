@@ -124,10 +124,10 @@ def test_stream_score_guards(spark, tmp_path):
 
 
 def test_stream_score_replay_overwrites_not_duplicates(spark, tmp_path):
-    """Crash-replay semantics: sinks are hive-partitioned by ingest_batch
-    with dynamic partition overwrite, so reprocessing the same files
-    (checkpoint lost = worst case) REPLACES each batch partition
-    instead of appending duplicates."""
+    """Crash-replay semantics: each sink writes its batch's
+    ``ingest_batch=<id>`` directory in overwrite mode, so reprocessing
+    the same files (checkpoint lost = worst case) REPLACES each batch
+    partition instead of appending duplicates."""
     import shutil
 
     arriving = _cloud(60, seed=4)
@@ -147,6 +147,31 @@ def test_stream_score_replay_overwrites_not_duplicates(spark, tmp_path):
         q.awaitTermination(120)
         shutil.rmtree(paths["checkpoint_dir"])  # simulate lost checkpoint
         assert spark.read.parquet(paths["scored_path"]).count() == 60
+
+
+def test_stream_score_replay_with_no_rows_empties_partition(spark, tmp_path):
+    """A replay whose result is empty still replaces the batch's
+    partition: alerts raised by the first attempt do not survive a
+    replay whose threshold raises none."""
+    import os
+    import shutil
+
+    inp = str(tmp_path / "in")
+    _df(spark, _cloud(60, seed=4)).write.mode("overwrite").parquet(inp)
+    paths = dict(
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        scored_path=str(tmp_path / "scored"),
+        alert_path=str(tmp_path / "alerts"),
+    )
+    for threshold, alerts in ((29.5, 30), (1e9, 0)):
+        shutil.rmtree(paths["checkpoint_dir"], ignore_errors=True)
+        q = _score_stream(spark, inp, schema=SCHEMA,
+                          score=F.col("vec_id").cast("double"),
+                          threshold=threshold, keep_cols=["vec_id"], **paths)
+        q.awaitTermination(120)
+        assert spark.read.parquet(paths["alert_path"]).count() == alerts
+    assert os.listdir(paths["alert_path"]) == ["ingest_batch=0"]
+    assert spark.read.parquet(paths["scored_path"]).count() == 60
 
 
 def test_stream_score_empty_keep_cols_means_no_passthrough(spark, tmp_path):
