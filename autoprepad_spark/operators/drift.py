@@ -72,7 +72,7 @@ def bucket_counts(
     cells, *, bucket_width: int = DEFAULT_BUCKET_WIDTH
 ) -> list[tuple[str, int, int]]:
     """ntok_histogram's (source, bucket, cnt) rows from (source, value,
-    cnt) cells on the driver — e.g. profile.source_ntok_counts, which a
+    cnt) cells on the driver — e.g. profile.part_and_cell_counts', which a
     suite run already collected for its fit. Same bucketing (floor of
     the double quotient) and the same nulls dropped."""
     out: dict = {}

@@ -350,7 +350,12 @@ def mark_slim(
     violation ``detail`` payload) — which blocks CollapseProject from
     re-inlining non-cheap expressions, so Catalyst prunes ``tokens``
     out of the plan right after the reduction projection: the python
-    queue holds ~60B/row instead of ~800B. Predicates still evaluate
+    queue holds ~60B/row instead of ~800B. That holds only while no
+    Filter sits above the UDF: Catalyst pushes a filter on its output
+    (say ``flag_total > 0``) below the projections, re-evaluating the
+    UDF over the raw rows, ``tokens`` included, beneath a second
+    evaluation. So ``explode_violations`` explodes a null array for
+    unflagged rows instead of filtering them. Predicates still evaluate
     vectorized in python over Arrow batches (north-rule contract).
 
     Flags are bit-identical to mark(engine="arrow")'s.

@@ -244,14 +244,26 @@ def profile(df: DataFrame, *, exact_quantiles: bool = True) -> DataFrame:
     return wide.join(q, "part", "left")
 
 
-def source_ntok_counts(df: DataFrame) -> list[tuple]:
-    """(source, n_tok, cnt) cells from ONE column-pruned hash-agg scan,
-    nulls kept as their own cells. Summed over source they are
-    global_stats' histogram; bucketed per source they are the drift
-    histogram (drift.bucket_counts) — so a suite run fits and profiles
-    drift from one scan. At most |sources| x |n_tok domain| cells."""
-    rows = df.groupBy("source", "n_tok").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    return [(r["source"], r["n_tok"], r["cnt"]) for r in rows]
+def part_and_cell_counts(
+    df: DataFrame, *, cells: bool = True
+) -> tuple[dict, list[tuple]]:
+    """({part: row_count}, [(source, n_tok, cnt) cells]) from ONE
+    column-pruned ``groupingSets([part], [source, n_tok])`` collect,
+    nulls kept as their own keys and cells; with ``cells=False`` the
+    ``[part]`` set is alone and the cells are empty. The cells summed
+    over source are global_stats' histogram; bucketed per source they
+    are the drift histogram (drift.bucket_counts) — so a suite run fits,
+    counts its partitions and profiles drift from one scan. At most
+    |parts| + |sources| x |n_tok domain| rows reach the driver."""
+    sets = [["part"], ["source", "n_tok"]] if cells else [["part"]]
+    keys = ["part", "source", "n_tok"] if cells else ["part"]
+    rows = (
+        df.groupingSets(sets, *keys)
+        .agg(F.grouping("part").alias("_g"), F.count(F.lit(1)).alias("cnt"))
+        .collect()
+    )
+    parts = {r["part"]: r["cnt"] for r in rows if r["_g"] == 0}
+    return parts, [(r["source"], r["n_tok"], r["cnt"]) for r in rows if r["_g"] == 1]
 
 
 def stats_from_ntok_counts(cells) -> ProfileStats:

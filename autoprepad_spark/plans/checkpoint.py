@@ -16,8 +16,8 @@ on a real catalog). Idempotence: completed_parts() de-duplicates on
 A fresh run costs no Spark job here: the table's existence is probed
 through the Hadoop FileSystem API, a missing table has no completed
 partitions, and mark() builds its few rows in the JVM
-(session.local_frame) instead of from a Python list, which would start
-a Python worker for the one-task write.
+(session.local_frame, one partition: one task, one file) instead of
+from a Python list, which would start a Python worker for the write.
 """
 
 from __future__ import annotations
@@ -68,7 +68,7 @@ class CheckpointTable:
         rows = [(run_id, p, status, int(n), int(v), float(w)) for p, n, v, w in parts]
         pdf = pd.DataFrame(rows, columns=CHECKPOINT_SCHEMA.fieldNames())
         df = local_frame(self.spark, pdf, CHECKPOINT_SCHEMA)
-        df.coalesce(1).write.mode("append").parquet(self.path)
+        df.write.mode("append").parquet(self.path)
 
     def remaining(self, df: DataFrame, run_id: str) -> DataFrame:
         """Filter the fact table to partitions not yet completed.

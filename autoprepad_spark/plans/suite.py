@@ -10,23 +10,28 @@ Reference lifecycle (SURVEY.md §3): construct plan -> fit (aggregations)
 Job graph — the token payload (the table's dominant bytes) is scanned
 exactly ONCE per run, and nothing outside the marking UDF starts a
 Python worker:
-  1. fit: ONE groupBy(source, n_tok) count scan (column-pruned, never
-     touches `tokens`), collected; count/min/max/mean/std and the exact
-     quantiles/MAD derive from its cells summed over source, and the
-     drift histogram is bucketed from the same cells — all driver-side
+  1. fit + row counts: ONE groupingSets([part], [source, n_tok]) count
+     scan (column-pruned, never touches `tokens`), collected. The
+     [part] rows are the per-partition row counts; count/min/max/mean/
+     std and the exact quantiles/MAD derive from the cells summed over
+     source, and the drift histogram is bucketed from the same cells —
+     all driver-side. With approximate quantiles and no baseline the
+     [part] set is alone.
   2. resume: the checkpoint's completed set is read once (no job at all
-     when the checkpoint table does not exist yet) and prunes both the
-     marking scan and the uniqueness branch
+     when the checkpoint table does not exist yet) and prunes the
+     marking scan, the uniqueness branch and the row counts
   3. the violations job (runs once, materialized eagerly): marking (JVM
-     array reductions + Arrow predicate UDF — the single pass that reads
-     `tokens`), with the referential check INLINED as a literal isin
-     flag (dimension collected once — no separate fact scan/anti-join)
-     -> filter flagged -> explode; unioned with the hash-keyed salted
-     uniqueness branch (column-pruned scan, 8-byte shuffle keys) and a
-     fused per-partition row-count branch — so verdict assembly needs no
-     extra pass over the input at all
-  4. verdict assembly from the materialized violation set (tiny; the
-     part x check grid is an explode of a literal array, no join)
+     array reductions + ONE Arrow evaluation of the predicate UDF — the
+     single pass that reads `tokens`), with the referential check
+     INLINED as a literal isin flag (dimension collected once — no
+     separate fact scan/anti-join) -> explode the flagged rows; unioned
+     with the hash-keyed salted uniqueness branch (column-pruned scan,
+     8-byte shuffle keys) and the fit's row counts as a driver-side
+     branch of tagged lineage rows
+  4. verdicts: ONE groupBy(part, check_name) count of the materialized
+     violation set, collected, densified against the fit's row counts
+     and judged on the driver over a local frame — collecting or
+     writing the verdicts costs no pass over anything
   5. drift: the baseline histogram is collected and every source scored
      driver-side against the fit's cells — no scan, join or grouped-map
      UDF of its own
@@ -39,7 +44,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, functions as F
+import pandas as pd
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from autoprepad_spark import schema as S
 from autoprepad_spark.datagen import VOCAB_SIZE
@@ -54,21 +60,26 @@ from autoprepad_spark.operators.marking import (
 from autoprepad_spark.operators.profile import (
     ProfileStats,
     global_stats,
-    source_ntok_counts,
+    part_and_cell_counts,
     stats_from_ntok_counts,
 )
 from autoprepad_spark.operators.uniqueness import duplicate_rows
 from autoprepad_spark.plans import verdicts as V
 from autoprepad_spark.plans.checkpoint import CheckpointTable
+from autoprepad_spark.session import local_frame
 
 ALL_CHECKS = ROW_CHECKS + ["unique_doc_id", "ref_source"]
-#: tag for the fused per-partition row-count rows in the violation union.
+#: tag for the per-partition row-count rows in the violation union.
 #: A configured violation_sink therefore contains these bookkeeping rows
 #: (check_name == ROW_COUNT_MARK, detail == the partition's row count) —
 #: per-partition lineage records that ride the same distributed write;
 #: ValidationResult.violations filters them out, and consumers reading
 #: the sink directly should filter on check_name != ROW_COUNT_MARK.
 ROW_COUNT_MARK = "__row_count__"
+_RC_SCHEMA = T.StructType([
+    T.StructField(name, T.StringType())
+    for name in ("part", "check_name", "doc_id", "detail")
+])
 
 
 def allowed_sources(dim: DataFrame) -> list[str]:
@@ -87,12 +98,12 @@ def allowed_sources(dim: DataFrame) -> list[str]:
 def read_violations(spark, path: str) -> DataFrame:
     """Read a violation sink written by ValidationSuite.run(violation_sink=...).
 
-    The sink contains fused per-partition row-count bookkeeping rows
+    The sink contains per-partition row-count bookkeeping rows
     (check_name == ROW_COUNT_MARK, doc_id null, detail = the count) that
-    ride the distributed violations write as a tagged union branch so
-    lineage costs no extra pass. This is THE supported way to consume
-    the sink as pure violations; ``read_row_counts`` returns the lineage
-    side."""
+    ride the distributed violations write as a tagged union branch; the
+    counts come from the fit's scan, so lineage costs no extra pass.
+    This is THE supported way to consume the sink as pure violations;
+    ``read_row_counts`` returns the lineage side."""
     return spark.read.parquet(path).filter(F.col("check_name") != ROW_COUNT_MARK)
 
 
@@ -167,11 +178,14 @@ class ValidationSuite:
                 raise ValueError(f"input schema does not conform: {issues}")
 
         # fit statistics ALWAYS over the full table (resume-deterministic);
-        # the exact fit's (source, n_tok) cells also give drift its
-        # current histogram, so drift costs no scan of its own
-        cells = None
-        if baseline_hist is not None or (stats is None and self.exact_quantiles):
-            cells = source_ntok_counts(df)
+        # the same scan counts each partition's rows, and the exact fit's
+        # (source, n_tok) cells also give drift its current histogram, so
+        # neither costs a scan of its own
+        part_rows, cells = part_and_cell_counts(
+            df,
+            cells=baseline_hist is not None
+            or (stats is None and self.exact_quantiles),
+        )
         if stats is None:
             if self.exact_quantiles:
                 stats = stats_from_ntok_counts((v, n) for _, v, n in cells)
@@ -179,10 +193,15 @@ class ValidationSuite:
                 stats = global_stats(df, exact_quantiles=False)
 
         # the completed set is read once and prunes both the marking scan
-        # and the uniqueness branch
+        # and the uniqueness branch; like ~isin(done), the row counts drop
+        # a null part on resume
         done = checkpoint.completed_parts(run_id) if checkpoint and run_id else []
         not_done = ~F.col("part").isin(done)
         todo = df.filter(not_done) if done else df
+        if done:
+            part_rows = {
+                p: n for p, n in part_rows.items() if p is not None and p not in done
+            }
 
         custom = validate_custom_checks(self.custom_checks)
         custom_names = [c.name for c in custom]
@@ -214,9 +233,9 @@ class ValidationSuite:
                 allowed_sources=allowed, custom=custom,
             )
         # ONE pass reads the token payload: marking (JVM array reductions
-        # + Arrow predicate UDF) -> filter flagged rows -> explode, inside
-        # the violations job below, which runs exactly once (violations
-        # are materialized eagerly). Every other pass below is
+        # + Arrow predicate UDF, evaluated once) -> explode the flagged
+        # rows, inside the violations job below, which runs exactly once
+        # (violations are materialized eagerly). Every other pass is
         # column-pruned and never touches `tokens`.
         row_viol = V.explode_violations(marked, include=selected)
 
@@ -239,16 +258,18 @@ class ValidationSuite:
             if done:
                 dup_viol = dup_viol.filter(not_done)
 
-        # per-partition row counts ride the same job as a fused branch
-        # (tagged rows in the union) instead of costing their own scan
-        rc_rows = todo.groupBy("part").agg(
-            F.count(F.lit(1)).alias("_rc")
-        ).select(
-            "part",
-            F.lit(ROW_COUNT_MARK).alias("check_name"),
-            F.lit(None).cast("string").alias("doc_id"),
-            F.col("_rc").cast("string").alias("detail"),
-        )
+        # the fit's per-partition row counts reach the sink as tagged
+        # lineage rows: a driver-side branch of the same write. The union
+        # is planned in df's session, so the branch is coalesced to keep
+        # it one task and one file.
+        rc_rows = local_frame(
+            df.sparkSession,
+            pd.DataFrame(
+                [(p, ROW_COUNT_MARK, None, str(n)) for p, n in part_rows.items()],
+                columns=_RC_SCHEMA.fieldNames(),
+            ),
+            _RC_SCHEMA,
+        ).coalesce(1)
 
         violations = row_viol.unionByName(rc_rows)
         if dup_viol is not None:
@@ -289,9 +310,6 @@ class ValidationSuite:
             violations.count()
             cached.append(violations)
 
-        row_counts = violations.filter(
-            F.col("check_name") == ROW_COUNT_MARK
-        ).select("part", F.col("detail").cast("long").alias("row_count"))
         violations = violations.filter(F.col("check_name") != ROW_COUNT_MARK)
         check_names = [
             c
@@ -304,8 +322,8 @@ class ValidationSuite:
             for c in custom
             if not c.hard and c.stat_max_rate is not None
         }
-        verdicts = V.assemble_verdicts(
-            row_counts, violations, check_names,
+        verdicts = V.driver_verdicts(
+            part_rows, violations, check_names,
             stat_max_rate=self.stat_max_rate, hard_checks=hard,
             stat_rates=stat_rates,
         )

@@ -11,18 +11,20 @@ engine's equivalent output is:
   violation_count + row_count.
 
 Scale design: the expensive marking pass runs ONCE — violations are
-materialized first (a filter on flag_total>0 keeps the output tiny), and
-per-partition verdict counts are then aggregated from the violation set
-(tiny) joined against a cheap column-pruned row-count pass, instead of
-re-running the marking UDF for the aggregation. The (part x check) grid
-is densified by exploding a literal array of check names onto the
-row-count rows — a JVM projection, no cross join and no Python-built
-frame.
+materialized first (only flagged rows explode, so the output stays
+tiny), and the suite's verdicts are then judged on the driver
+(``driver_verdicts``): ONE ``groupBy(part, check_name)`` count of the
+violation set is collected, densified against the per-partition row
+counts the fit's scan already collected, and judged by applying
+``_judge`` to a local frame — no pass over the input, no join.
+``assemble_verdicts`` is the same judgement as a Spark plan over a
+violation sink and its row-count rows, kept as the reference the driver
+path is tested against.
 
 A stream batch is small enough to cache marked, so its verdicts skip the
 violation set: ``flag_count_verdicts`` sums each check's flag per
-partition in the same aggregation that counts the rows. Both paths
-judge with one projection (``_judge``). ``violation_exploder`` and
+partition in the same aggregation that counts the rows. Every path
+judges with one projection (``_judge``). ``violation_exploder`` and
 ``flag_count_verdicts`` make their Columns once and return functions
 that only apply them, so a streaming query makes them once per query.
 """
@@ -31,9 +33,11 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame, functions as F
+import pandas as pd
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from autoprepad_spark.operators.marking import FLAG_COLS, REF_CHECK, REF_FLAG, ROW_CHECKS
+from autoprepad_spark.session import local_frame
 
 #: checks whose violations are hard failures (any violation -> fail)
 HARD_CHECKS = {
@@ -47,6 +51,11 @@ HARD_CHECKS = {
 #: statistical checks pass while the violation RATE stays under threshold
 #: (default 0.1 — the reference's top-10% labeling default, control.py:98)
 STAT_MAX_RATE = 0.1
+#: (part x check) verdict cells ``driver_verdicts`` judges on the driver
+#: at most: 10^5 partitions x 10 checks. Up to here the counts collect
+#: and the local frame stay a few tens of MB (under Arrow's 48 MB
+#: local-relation threshold, so collecting the verdicts runs no job).
+MAX_DRIVER_VERDICTS = 1_000_000
 
 
 def violation_exploder(
@@ -92,10 +101,17 @@ def violation_exploder(
             for name, flag, detail in checks
         ]
     )
+    # no Filter on flag_total: Catalyst would push it below the marking
+    # projections and evaluate the flag UDF twice, once over the raw rows
+    # with their tokens. Unflagged rows explode a null array, which emits
+    # nothing, and Spark infers no filter from a generator over an
+    # expression (only over a bare column).
     flagged = F.col("flag_total") > 0
     hit = [
         F.col("part"),
-        F.explode(F.filter(pairs, lambda s: s["v"] == 1)).alias("_h"),
+        F.explode(
+            F.filter(F.when(flagged, pairs), lambda s: s["v"] == 1)
+        ).alias("_h"),
         F.col("doc_id"),
     ]
     flat = [
@@ -104,14 +120,15 @@ def violation_exploder(
         F.col("doc_id"),
         F.col("_h.detail").alias("detail"),
     ]
-    return lambda marked: marked.filter(flagged).select(*hit).select(*flat)
+    return lambda marked: marked.select(*hit).select(*flat)
 
 
 def explode_violations(marked: DataFrame, include: set[str] | None = None) -> DataFrame:
     """Marked rows -> one violation row per (row, violated check).
 
-    Filter-before-explode: only rows with flag_total > 0 reach the
-    generator, so the explode multiplies a <<1% subset. Picks up the
+    Only rows with flag_total > 0 explode into violation rows (a <<1%
+    subset); the rest explode a null array, so the plan has no Filter
+    above the marking UDF for Catalyst to push below it. Picks up the
     inlined referential flag automatically when the marking pass added
     it (detail = the offending source value; row checks carry n_tok).
     When the marking pass retained the array diagnostics (mark_slim),
@@ -119,7 +136,7 @@ def explode_violations(marked: DataFrame, include: set[str] | None = None) -> Da
     length checks, min:max token ids for the bounds check. (These
     references also pin the reductions as multi-use projected columns,
     which is what keeps the token payload out of the python-exchange
-    queue — see mark_slim.)
+    queue, with no Filter above the UDF — see mark_slim.)
     """
     return violation_exploder(marked.columns, include)(marked)
 
@@ -193,6 +210,55 @@ def assemble_verdicts(
         F.col("g.row_count").alias("row_count"),
     )
     return merged.select(*_judge(stat_max_rate, hard_checks, stat_rates))
+
+
+_COUNT_SCHEMA = T.StructType([
+    T.StructField("part", T.StringType()),
+    T.StructField("check_name", T.StringType()),
+    T.StructField("violation_count", T.LongType()),
+    T.StructField("row_count", T.LongType()),
+])
+
+
+def driver_verdicts(
+    row_counts: dict,
+    violations: DataFrame,
+    check_names: list[str],
+    *,
+    stat_max_rate: float = STAT_MAX_RATE,
+    hard_checks: set[str] | None = None,
+    stat_rates: dict[str, float] | None = None,
+) -> DataFrame:
+    """``assemble_verdicts`` judged on the driver.
+
+    row_counts: {part: row_count} for the partitions to judge (a null
+    ``part`` is a partition of its own); violations: VIOLATION_SCHEMA
+    rows. ONE ``groupBy(part, check_name)`` count of the violations is
+    collected, densified into the (part x check) grid here, and judged
+    by ``_judge`` over a local frame, so collecting the verdicts runs no
+    job and writing them is one task. Raises above MAX_DRIVER_VERDICTS
+    grid cells, where a driver-side grid stops being cheap."""
+    cells = len(row_counts) * len(check_names)
+    if cells > MAX_DRIVER_VERDICTS:
+        raise ValueError(
+            f"{len(row_counts)} partitions x {len(check_names)} checks = {cells} "
+            f"verdicts, above the {MAX_DRIVER_VERDICTS} judged on the driver"
+        )
+    counts = {
+        (r["part"], r["check_name"]): r["count"]
+        for r in violations.groupBy("part", "check_name").count().collect()
+    }
+    pdf = pd.DataFrame(
+        [
+            (p, c, counts.get((p, c), 0), n)
+            for p, n in row_counts.items()
+            for c in check_names
+        ],
+        columns=_COUNT_SCHEMA.fieldNames(),
+    )
+    return local_frame(violations.sparkSession, pdf, _COUNT_SCHEMA).select(
+        *_judge(stat_max_rate, hard_checks, stat_rates)
+    )
 
 
 def flag_count_verdicts(check_names: list[str]) -> Callable[[DataFrame], DataFrame]:

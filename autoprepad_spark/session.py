@@ -16,6 +16,7 @@ import shutil
 import subprocess
 import sys
 import tempfile
+import threading
 import zipimport
 
 import pandas as pd
@@ -244,15 +245,49 @@ def get_spark(
     return spark
 
 
+_ONE_SLICE: SparkSession | None = None
+_ONE_SLICE_LOCK = threading.Lock()
+
+
+def _one_slice_session(spark: SparkSession) -> SparkSession:
+    """A clone of ``spark`` (its SQL conf, temporary views and functions)
+    whose leaf nodes run as ONE partition, made once per SparkContext:
+    a streaming query hands each micro-batch a session of its own, and a
+    clone per session would be one more session per trigger."""
+    global _ONE_SLICE
+    with _ONE_SLICE_LOCK:
+        if _ONE_SLICE is None or _ONE_SLICE.sparkContext is not spark.sparkContext:
+            one = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+            one.conf.set("spark.sql.leafNodeDefaultParallelism", "1")
+            _ONE_SLICE = one
+        return _ONE_SLICE
+
+
 def local_frame(spark: SparkSession, pdf: pd.DataFrame, schema: T.StructType) -> DataFrame:
-    """A small driver-side table as a DataFrame built in the JVM.
+    """A small driver-side table as a one-partition DataFrame built in
+    the JVM.
 
     ``createDataFrame`` over a Python list scans a Python RDD, so even a
     one-row write starts a Python worker task. A pandas frame goes over
-    Arrow into a local relation instead; Arrow skips empty frames, so an
-    empty one becomes an empty typed projection."""
+    Arrow into a local relation instead (below
+    ``spark.sql.execution.arrow.localRelationThreshold``, 48 MB by
+    default): collecting it, or a projection of it, runs no job. Arrow
+    skips empty frames, so an empty one becomes an empty typed
+    projection.
+
+    A local relation is scanned in as many tasks as it has rows, up to
+    the session's leaf parallelism, so writing 8 rows wrote up to 8
+    files. ``repartition``/``coalesce`` would make collecting it a job,
+    so the frame is planned instead in a clone, made from the first
+    session that asked (conf set later is not seen), whose leaf
+    parallelism is 1: written on its own it is one task and one file.
+    Union or join it INTO a frame of ``spark``
+    (``big.unionByName(local)``), not the other way round: a plan is
+    made in the session of its outermost frame, and in the clone a file
+    scan would plan as few splits as a leaf parallelism of 1 allows."""
+    one = _one_slice_session(spark)
     if len(pdf):
-        return spark.createDataFrame(pdf, schema=schema)
-    return spark.range(0).select(
+        return one.createDataFrame(pdf, schema=schema)
+    return one.range(0).select(
         *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
     )

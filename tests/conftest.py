@@ -34,3 +34,39 @@ def codegen_compiles(spark) -> int:
     a call to see whether it planned any code the cache did not hold."""
     metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def plan_nodes(df):
+    """The physical plan nodes of ``df`` as AQE first plans it (Exchanges
+    placed, no stage run yet), depth first."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        yield node
+        children = node.children()
+        stack.extend(children.apply(i) for i in reversed(range(children.size())))
+
+
+def plan_shape(df) -> dict[str, int]:
+    """Counts of the nodes that cost a shuffle, a Python worker round trip
+    or a row multiplication in ``df``'s plan: ``Exchange`` (shuffle and
+    broadcast), ``Python`` (ArrowEvalPython, MapInArrow) and ``Generate``."""
+    shape = {"Exchange": 0, "Python": 0, "Generate": 0}
+    for node in plan_nodes(df):
+        name = node.nodeName()
+        if name.endswith("Exchange"):
+            shape["Exchange"] += 1
+        elif name in ("ArrowEvalPython", "MapInArrow"):
+            shape["Python"] += 1
+        elif name == "Generate":
+            shape["Generate"] += 1
+    return shape
+
+
+def output_names(node) -> list[str]:
+    """Column names of a plan node's output."""
+    out = node.output()
+    return [out.apply(i).name() for i in range(out.size())]

@@ -291,15 +291,19 @@ def test_drift_driver_side_matches_grouped_map(spark):
 
 def test_fit_cells_bucket_like_ntok_histogram(spark):
     """The suite's drift histogram (bucketed from the fit's cells) equals
-    ntok_histogram's scan: null sources and null n_tok dropped."""
+    ntok_histogram's scan: null sources and null n_tok dropped. The same
+    collect counts each partition's rows, a null part included."""
     from autoprepad_spark.operators.drift import bucket_counts, ntok_histogram
-    from autoprepad_spark.operators.profile import source_ntok_counts, stats_from_ntok_counts
+    from autoprepad_spark.operators.profile import part_and_cell_counts, stats_from_ntok_counts
 
-    rows = [("web", 10), ("web", 70), ("web", 70), ("code", 0), ("code", 129),
-            (None, 5), ("web", None), (None, None), ("code", 64)]
-    df = spark.createDataFrame(rows, "source string, n_tok int")
+    rows = [("a", "web", 10), ("a", "web", 70), ("b", "web", 70), ("b", "code", 0),
+            ("b", "code", 129), (None, None, 5), ("a", "web", None), (None, None, None),
+            ("a", "code", 64)]
+    df = spark.createDataFrame(rows, "part string, source string, n_tok int")
     want = sorted(tuple(r) for r in ntok_histogram(df, bucket_width=64).collect())
-    cells = source_ntok_counts(df)
+    parts, cells = part_and_cell_counts(df)
+    assert parts == {"a": 4, "b": 3, None: 2}
+    assert part_and_cell_counts(df, cells=False) == (parts, [])
     assert sorted(bucket_counts(cells, bucket_width=64)) == want
     assert want == [("code", 0, 1), ("code", 1, 1), ("code", 2, 1),
                     ("web", 0, 1), ("web", 1, 2)]

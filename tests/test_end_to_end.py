@@ -175,3 +175,50 @@ def test_flag_count_verdicts_match_assembled(spark, tokens_df, dim_df):
     assert sorted(map(tuple, got.collect()), key=str) == rows
     assert any(r[0] is None and r[1] == "null_doc_id" and r[2] == "fail" for r in rows)
     marked.unpersist()
+
+
+@pytest.mark.parametrize("case", ["fresh", "resume", "empty"])
+def test_driver_verdicts_match_assembled(spark, tokens_df, tmp_path, case):
+    """The suite's driver-judged verdicts equal ``assemble_verdicts`` over
+    the same violation sink: with a null partition, on a resume that
+    skips done parts (the null part is dropped with them), and on an
+    empty table (no verdict rows)."""
+    from autoprepad_spark.plans import verdicts as V
+    from autoprepad_spark.plans.checkpoint import CheckpointTable
+    from autoprepad_spark.plans.suite import ALL_CHECKS, read_row_counts, read_violations
+
+    df = tokens_df.unionByName(_null_part_rows(spark))
+    if case == "empty":
+        df = spark.createDataFrame([], TOKENS_SCHEMA)
+    ck = CheckpointTable(spark, str(tmp_path / "ck"))
+    done = ["p-001", "p-003"] if case == "resume" else []
+    if done:
+        ck.mark("r", [(p, 1, 0, 0.0) for p in done])
+    sink = str(tmp_path / "viol")
+    res = ValidationSuite().run(df, checkpoint=ck, run_id="r", violation_sink=sink)
+    checks = [c for c in ALL_CHECKS if c != "ref_source"]
+    want = V.assemble_verdicts(
+        read_row_counts(spark, sink), read_violations(spark, sink), checks)
+    assert [(f.name, f.dataType) for f in res.verdicts.schema] == [
+        (f.name, f.dataType) for f in want.schema]
+    rows = sorted(map(tuple, want.collect()), key=str)
+    assert sorted(map(tuple, res.verdicts.collect()), key=str) == rows
+    parts = {r[0] for r in rows}
+    if case == "fresh":
+        assert parts == {f"p-{i:03d}" for i in range(8)} | {None}
+        assert any(r[0] is None and r[1] == "null_doc_id" and r[2] == "fail" for r in rows)
+    elif case == "resume":
+        assert parts == {f"p-{i:03d}" for i in range(8)} - set(done)
+    else:
+        assert rows == []
+
+
+def test_driver_verdicts_raise_above_the_driver_bound(spark):
+    """A verdict grid larger than MAX_DRIVER_VERDICTS fails loudly, before
+    any job collects the counts."""
+    from autoprepad_spark.plans import verdicts as V
+
+    parts = {f"p-{i}": 1 for i in range(V.MAX_DRIVER_VERDICTS // 10 + 1)}
+    viol = spark.createDataFrame([], "part string, check_name string")
+    with pytest.raises(ValueError, match="judged on the driver"):
+        V.driver_verdicts(parts, viol, [f"c{i}" for i in range(10)])

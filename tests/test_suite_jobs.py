@@ -17,11 +17,12 @@ from autoprepad_spark import runner
 from autoprepad_spark.operators.drift import ntok_histogram
 from autoprepad_spark.plans.checkpoint import CheckpointTable
 from autoprepad_spark.sources.tables import list_names
+from conftest import output_names, plan_nodes, plan_shape
 
 #: jobs of a warm runner.main call with a dimension, a drift baseline and
-#: a fresh checkpoint: measured 20 both at this shape and at 64k rows /
+#: a fresh checkpoint: measured 18 both at this shape and at 64k rows /
 #: 32 parts, so the bound is the measurement
-MAX_JOBS_PER_CALL = 20
+MAX_JOBS_PER_CALL = 18
 _PYTHON_OP = re.compile(r"Python|Pandas|InArrow|ArrowEval")
 
 
@@ -78,6 +79,28 @@ def test_runner_call_job_budget(spark, tmp_path):
     # built in the JVM
     py = _python_jobs(spark, jobs)
     assert len(py) <= 1, py
+    # the driver-side tables (verdicts, drift scores) are one-partition
+    # local frames: one task, one file each
+    for sink in ("verdicts", "drift"):
+        files = [f for f in list_names(spark, str(tmp_path / "out1" / sink))
+                 if f.endswith(".parquet")]
+        assert len(files) == 1, (sink, files)
+
+
+def test_violations_plan_runs_the_flag_udf_once(spark, tokens_df, dim_df):
+    """The suite's violations plan evaluates the Arrow flag UDF once, over
+    the reduced columns: no Filter above the UDF for Catalyst to push
+    below it, where a second evaluation read the raw rows' tokens."""
+    from autoprepad_spark.operators.marking import mark_slim
+    from autoprepad_spark.operators.profile import global_stats
+    from autoprepad_spark.plans.suite import allowed_sources
+    from autoprepad_spark.plans.verdicts import explode_violations
+
+    viol = explode_violations(mark_slim(
+        tokens_df, global_stats(tokens_df), allowed_sources=allowed_sources(dim_df)))
+    assert plan_shape(viol) == {"Exchange": 0, "Python": 1, "Generate": 1}
+    (udf,) = [n for n in plan_nodes(viol) if n.nodeName() == "ArrowEvalPython"]
+    assert "tokens" not in output_names(udf.children().apply(0))
 
 
 def test_missing_checkpoint_costs_no_job(spark, tokens_df, tmp_path):
