@@ -55,8 +55,7 @@ def impute_median(df: DataFrame, cols: list[str], *, method: str = "hist") -> Da
     ObjectHashAggregate — see functions.stats); ``approx``:
     percentile_approx sketch for unbounded domains."""
     if method == "hist":
-        from autoprepad_spark.functions.stats import _col_histograms
-        from autoprepad_spark.operators.profile import weighted_quantiles
+        from autoprepad_spark.functions.stats import _col_histograms, weighted_quantiles
 
         hists = _col_histograms(df, cols)
         meds = {

@@ -9,12 +9,21 @@ Reference formulas reproduced exactly:
 * Z score: (x - mean)/std(ddof=1), flag |z| > 3 (ZTransformerMean.py:32-58)
 * MinMax rescale of scores (pipelines/runs.py:200-201)
 * Robust scale (x - median)/IQR (pipelines/configuration.py:192-194)
-* top-k% percentile labeling (pipelines/runs.py:211-214)
+* weighted quantiles for top-k% percentile labeling (pipelines/runs.py:
+  211-214; the threshold itself is ``operators/scoring.predict``'s)
 * percentile sweep 1..100 for PR curves (experiment.py:394-405)
 
-Each `fit_*` is ONE aggregation (partial+final, sketch-compatible);
+Each `fit_*` is ONE aggregation (partial+final, sketch-compatible; the
+``approx`` fit adds a MAD pass);
 each `*_flag`/`*_scale` is a pure Column expression (whole-stage codegen).
 Zero-spread guards: constant columns never flag (MAD==0 -> 0, std==0 -> 0).
+
+This module is the engine's one home of the three robust rules: their
+constants, the (values, counts) -> RobustStats derivation
+(``_robust_from_hist``) and their Column forms. The suite's fit
+(``operators/profile``), the marking kernels (``operators/marking``), the
+shard-profile fit (``operators/incremental``) and the history alarms
+(``operators/drift``) all call into it.
 
 Quantile strategy (``method=`` on every fit):
 * ``hist`` (default) — value-count histogram: groupBy(value).count() is a
@@ -26,9 +35,8 @@ Quantile strategy (``method=`` on every fit):
   non-viable at 10^12 rows). Correct for bounded-cardinality domains
   (ints, bounded decimals — every distinct value becomes one agg cell).
 * ``approx`` — percentile_approx KLL-style sketch for genuinely
-  continuous/unbounded domains (document the rsd tolerance).
-* ``exact`` — legacy F.percentile (ObjectHashAggregate); kept as an
-  oracle-debug escape hatch, not a production path.
+  continuous/unbounded domains (accuracy 10,000; merge order makes it
+  not bit-deterministic).
 """
 
 from __future__ import annotations
@@ -38,18 +46,49 @@ from dataclasses import dataclass
 import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
 
-from autoprepad_spark.operators.profile import mad_from_counts, weighted_quantiles
-
-TUKEY_K = 1.5
-MAD_SCALE = 0.6745
-MAD_THRESHOLD = 3.5
-Z_THRESHOLD = 3.0
+TUKEY_K = 1.5  # TukeyTransformer.py:33
+MAD_SCALE = 0.6745  # MedianAbsolutDeviation.py:56
+MAD_THRESHOLD = 3.5  # MedianAbsolutDeviation.py:36
+Z_THRESHOLD = 3.0  # ZTransformerMean.py:32
 
 
-def _pct(col: Column, probs, exact: bool):
-    if exact:
-        return F.percentile(col, probs)
-    return F.percentile_approx(col, probs, 10_000)
+def weighted_quantiles(
+    values: np.ndarray, counts: np.ndarray, qs: list[float]
+) -> list[float]:
+    """np.quantile(method='linear') parity over (value, count) pairs.
+
+    Position h = (n-1)q on the expanded sorted data; the element at
+    0-based position p is values[searchsorted(cumcounts, p+1, 'left')].
+    """
+    order = np.argsort(values, kind="stable")
+    v = np.asarray(values, dtype=np.float64)[order]
+    c = np.asarray(counts, dtype=np.int64)[order]
+    cum = np.cumsum(c)
+    n = int(cum[-1])
+    out = []
+    for q in qs:
+        h = (n - 1) * float(q)
+        lo = int(np.floor(h))
+        frac = h - lo
+        i0 = int(np.searchsorted(cum, lo + 1, side="left"))
+        x0 = v[i0]
+        if frac == 0.0:
+            out.append(float(x0))
+            continue
+        i1 = int(np.searchsorted(cum, lo + 2, side="left"))
+        x1 = v[min(i1, len(v) - 1)]
+        out.append(float(x0 + frac * (x1 - x0)))
+    return out
+
+
+def mad_from_counts(values: np.ndarray, counts: np.ndarray, median: float) -> float:
+    """Exact MAD from the same histogram: fold to |v - median|, merge
+    colliding cells, weighted median."""
+    dev = np.abs(np.asarray(values, dtype=np.float64) - median)
+    uniq, inv = np.unique(dev, return_inverse=True)
+    merged = np.zeros(len(uniq), dtype=np.int64)
+    np.add.at(merged, inv, np.asarray(counts, dtype=np.int64))
+    return weighted_quantiles(uniq, merged, [0.5])[0]
 
 
 #: ceiling on total histogram cells collected to the driver by the
@@ -96,25 +135,37 @@ def _col_histograms(
             ]
         )
     )
-    # Arrow-backed toPandas: a bounded-decimal column can easily have
-    # 10^5-10^7 distinct cells — row-based collect() crawls through py4j,
-    # the Arrow path moves the whole histogram in a few batches.
-    pdf = (
+    cells = (
         df.select(pairs.alias("p"))
         .select(F.col("p.c").alias("c"), F.col("p.v").alias("v"))
         .filter(F.col("v").isNotNull())
         .groupBy("c", "v")
         .agg(F.count(F.lit(1)).alias("n"))
-        .limit(max_cells + 1)
-        .toPandas()
     )
+    return _collect_histograms(
+        cells, cols, max_cells,
+        f"the domain of {cols} is not bounded; use method='approx' "
+        "(percentile_approx sketch) for continuous columns",
+    )
+
+
+def _collect_histograms(
+    cells: DataFrame, cols: list[str] | None, max_cells: int, hint: str
+) -> dict[str, tuple[np.ndarray, np.ndarray]]:
+    """Collect (c, v, n) histogram cells with the cap on the collecting
+    action (``LIMIT max_cells+1``) and split them per column; ``cols``
+    None takes every column present. More than ``max_cells`` cells
+    raises ValueError with ``hint``."""
+    # Arrow-backed toPandas: a bounded-decimal column can easily have
+    # 10^5-10^7 distinct cells — row-based collect() crawls through py4j,
+    # the Arrow path moves the whole histogram in a few batches.
+    pdf = cells.limit(max_cells + 1).toPandas()
     if len(pdf) > max_cells:
         raise ValueError(
-            f"histogram fit over {cols} exceeds {max_cells} distinct "
-            "cells — the column domain is not bounded; use "
-            "method='approx' (percentile_approx sketch) for continuous "
-            "columns"
+            f"histogram fit exceeds {max_cells} distinct cells — {hint}"
         )
+    if cols is None:
+        cols = sorted(pdf["c"].unique())
     out = {}
     for c in cols:
         sub = pdf[pdf["c"] == c]
@@ -266,34 +317,14 @@ def robust_scale(col: Column, stats: RobustStats) -> Column:
     return (col - stats.median) / stats.iqr
 
 
-def percentile_threshold(
-    df: DataFrame, col: str, pct: float = 0.9, *, method: str = "hist"
-) -> float:
-    """Threshold for top-(1-pct) labeling (runs.py:211-214, default top 10%)."""
-    if method == "hist":
-        v, c = _col_histograms(df, [col])[col]
-        if v.size == 0:
-            return 0.0
-        return weighted_quantiles(v, c, [pct])[0]
-    c = F.col(col).cast("double")
-    return float(df.agg(_pct(c, F.lit(pct), method == "exact").alias("t")).collect()[0]["t"])
-
-
-def percentile_sweep(df: DataFrame, col: str, *, method: str = "hist") -> DataFrame:
+def percentile_sweep(df: DataFrame, col: str) -> DataFrame:
     """(pct 1..100, value) from ONE scan (experiment.py:394-405 ran 100
-    separate np.percentile calls; here one histogram / percentile array)."""
-    if method == "hist":
-        v, c = _col_histograms(df, [col])[col]
-        vals = weighted_quantiles(v, c, [i / 100.0 for i in range(1, 101)]) if v.size else [0.0] * 100
-        return df.sparkSession.createDataFrame(
-            [(i + 1, float(x)) for i, x in enumerate(vals)], "pct int, value double"
-        )
-    c = F.col(col).cast("double")
-    probs = F.array(*[F.lit(i / 100.0) for i in range(1, 101)])
-    agg = df.agg(_pct(c, probs, method == "exact").alias("vals"))
-    return agg.select(
-        F.posexplode("vals").alias("idx", "value")
-    ).select((F.col("idx") + 1).alias("pct"), "value")
+    separate np.percentile calls; here one value-count histogram)."""
+    v, c = _col_histograms(df, [col])[col]
+    vals = weighted_quantiles(v, c, [i / 100.0 for i in range(1, 101)]) if v.size else [0.0] * 100
+    return df.sparkSession.createDataFrame(
+        [(i + 1, float(x)) for i, x in enumerate(vals)], "pct int, value double"
+    )
 
 
 def variance_report(df: DataFrame, cols: list[str]) -> DataFrame:
@@ -338,21 +369,24 @@ def fit_robust_multi(
     """Fit statistics for MANY columns, fused.
 
     ``hist``: ONE scan for every column's full RobustStats (value-count
-    histograms, driver-side derivation). ``exact``/``approx``: two scans
-    total (wide agg + MAD pass), F.percentile or the KLL sketch. The
+    histograms, driver-side derivation). ``approx``: two scans total
+    (wide agg + MAD pass) with the percentile_approx sketch. The
     reference fits each transformer eagerly per column
     (pipelines/runs.py:139) — at scale that's 2 scans per column."""
     if method == "hist":
         hists = _col_histograms(df, cols)
         return {c: _robust_from_hist(*hists[c]) for c in cols}
-    exact = method == "exact"
+    if method != "approx":
+        raise ValueError(f"unknown fit method {method!r}: use 'hist' or 'approx'")
     aggs = []
     for c in cols:
         cc = F.col(c).cast("double")
         aggs += [
             F.avg(cc).alias(f"mean_{c}"),
             F.stddev_samp(cc).alias(f"std_{c}"),
-            _pct(cc, F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75)), exact).alias(f"q_{c}"),
+            F.percentile_approx(
+                cc, F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75)), 10_000
+            ).alias(f"q_{c}"),
             F.min(cc).alias(f"min_{c}"),
             F.max(cc).alias(f"max_{c}"),
         ]
@@ -360,7 +394,9 @@ def fit_robust_multi(
     meds = {c: float(row[f"q_{c}"][1]) if row[f"q_{c}"] else 0.0 for c in cols}
     mad_row = df.agg(
         *[
-            _pct(F.abs(F.col(c).cast("double") - F.lit(meds[c])), F.lit(0.5), exact).alias(f"mad_{c}")
+            F.percentile_approx(
+                F.abs(F.col(c).cast("double") - F.lit(meds[c])), F.lit(0.5), 10_000
+            ).alias(f"mad_{c}")
             for c in cols
         ]
     ).collect()[0]

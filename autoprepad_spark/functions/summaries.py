@@ -44,7 +44,7 @@ of n — and when every partition holds at most m values (``n_p <= m``)
 the summary degenerates to the exact value-count histogram, making
 every downstream statistic EXACTLY equal to the ``method='hist'`` fit
 (np.quantile linear-interpolation parity via
-`profile.weighted_quantiles`). Exact moments (n, sum, sum of squares)
+`stats.weighted_quantiles`). Exact moments (n, sum, sum of squares)
 ride the same single scan, so mean/std are always exact regardless of
 capacity.
 
@@ -78,8 +78,11 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from autoprepad_spark.operators.profile import mad_from_counts, weighted_quantiles
-from autoprepad_spark.functions.stats import RobustStats
+from autoprepad_spark.functions.stats import (
+    RobustStats,
+    mad_from_counts,
+    weighted_quantiles,
+)
 
 # one uniform schema for both summaries: moments/null/dec rows keep the
 # payload in w (v NULL); value rows keep the value in v and its count

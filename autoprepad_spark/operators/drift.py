@@ -34,6 +34,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F, types as T
 
+from autoprepad_spark.functions.stats import MAD_SCALE, MAD_THRESHOLD
 from autoprepad_spark.session import local_frame
 
 PSI_EPS = 1e-6
@@ -368,7 +369,7 @@ def history_flags(
     *,
     key_cols: tuple[str, ...] = ("part", "check_name"),
     order_col: str = "run_seq",
-    threshold: float = 3.5,
+    threshold: float = MAD_THRESHOLD,
     min_history: int = 3,
 ) -> DataFrame:
     """Modified-Z anomaly flags for a metric time series against its own
@@ -380,7 +381,8 @@ def history_flags(
     For each key (default: a partition x check series) rows are ordered
     by `order_col` and every row is judged against the rows STRICTLY
     BEFORE it: med = median(prior), MAD = median(|prior - med|),
-    mod_z = 0.6745 * |x - med| / MAD (the marking pass's F6 constants).
+    mod_z = MAD_SCALE * |x - med| / MAD, threshold MAD_THRESHOLD
+    (``functions/stats``' constants, the marking pass's MAD rule).
     `flagged` when mod_z > threshold and at least `min_history` prior
     points exist. A zero-MAD history (constant so far) flags ANY
     deviation — a violation count that has been 0 for thirty runs and
@@ -394,8 +396,6 @@ def history_flags(
     history. The O(h^2) trailing medians are over h = runs-per-key,
     hundreds at most.
     """
-    from autoprepad_spark.operators.marking import MAD_SCALE
-
     keys = list(key_cols)
     out_schema = T.StructType(
         history.schema.fields

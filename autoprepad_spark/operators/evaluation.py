@@ -24,7 +24,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
-from autoprepad_spark.operators.profile import weighted_quantiles
+from autoprepad_spark.functions.stats import weighted_quantiles
 
 
 def or_merge(pred: Column, *stat_flags: Column) -> Column:

@@ -558,7 +558,7 @@ def append_to_index(
 # ---------------------------------------------------------------------------
 #
 # The engine's entire fit path (fit_robust / impute_median /
-# percentile_threshold / drift baselines — functions/stats.py) derives
+# percentile_sweep / drift baselines — functions/stats.py) derives
 # from per-column (value, count) histograms. A histogram over a UNION
 # of shards is the cell-wise SUM of the shards' histograms, so the
 # profile itself is the mergeable sketch: profile each shard once when
@@ -634,42 +634,23 @@ def fit_from_profile(profile: DataFrame, cols: list[str] | None = None):
     IDENTICAL to fit_robust_multi(method='hist') over the full data,
     because both reduce to _robust_from_hist on the same histogram.
 
-    The collect is guarded by the same MAX_HIST_CELLS ceiling as the
-    direct fit path (the profile is executor-side until the cell count
-    is verified bounded)."""
-    from pyspark.storagelevel import StorageLevel
-
+    The collect is guarded like the direct fit's: the MAX_HIST_CELLS
+    ceiling rides the collecting action (``LIMIT cap+1``), so the
+    profile is aggregated once and never reaches the driver unbounded."""
     from autoprepad_spark.functions.stats import (
         MAX_HIST_CELLS,
+        _collect_histograms,
         _robust_from_hist,
     )
 
-    import numpy as np
-
-    hist = (
-        profile.filter(F.col("v").isNotNull())
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    cells = profile.filter(F.col("v").isNotNull()).select(
+        F.col("col").alias("c"), "v", "n"
     )
-    try:
-        n_cells = hist.count()
-        if n_cells > MAX_HIST_CELLS:
-            raise ValueError(
-                f"profile exceeds {MAX_HIST_CELLS} distinct cells — "
-                "quantize continuous columns before shard_profile"
-            )
-        pdf = hist.toPandas()
-    finally:
-        hist.unpersist()
-    if cols is None:
-        cols = sorted(pdf["col"].unique())
-    out = {}
-    for c in cols:
-        sub = pdf[pdf["col"] == c]
-        out[c] = _robust_from_hist(
-            sub["v"].to_numpy(dtype=np.float64),
-            sub["n"].to_numpy(dtype=np.int64),
-        )
-    return out
+    hists = _collect_histograms(
+        cells, cols, MAX_HIST_CELLS,
+        "quantize continuous columns before shard_profile",
+    )
+    return {c: _robust_from_hist(*h) for c, h in hists.items()}
 
 
 def profile_counts(profile: DataFrame) -> DataFrame:

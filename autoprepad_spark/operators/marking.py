@@ -6,19 +6,22 @@ MedianAbsolutDeviation.py:53-61 modified Z with 0.6745 / 3.5,
 ZTransformerMean.py:47-58 z-score with threshold 3, ddof=1) and counts
 flags per row (TukeyTransformerTotal.py:25-36 row-wise sum).
 
-Two predicate engines produce IDENTICAL flags:
+One production marker and one oracle produce IDENTICAL flags:
 
 * ``mark_slim`` — the production path (the suite, the runner and the
-  streaming faces). The JVM reduces the token arrays to scalars
+  streaming pipeline). The JVM reduces the token arrays to scalars
   (size/min/max) in one projection, then one vectorized Arrow UDF
   (``arrow_udf``, pyarrow in / pyarrow out) evaluates every row-level
   predicate with numpy kernels over Arrow record batches: no per-row
   Python (north-rule requirement), and the heavy ``tokens`` column
-  never crosses into Python. ``mark(engine="arrow")`` is the same UDF
-  over a pass-through projection that keeps the input columns.
-* ``mark(engine="native")`` — the same predicates as Catalyst Column
-  expressions (whole-stage codegen): the parity oracle the Arrow path
-  is tested against.
+  never crosses into Python.
+* ``mark`` — the same predicates as Catalyst Column expressions (whole-
+  stage codegen; the statistical ones are ``functions/stats``'
+  ``tukey_flag``, ``mad_flag`` and ``zscore_flag``) over a pass-through
+  projection that keeps the input columns: the parity oracle the Arrow
+  path is tested against.
+
+The thresholds are ``functions/stats``' constants in both.
 
 Fit statistics arrive as plain floats (broadcast as literals into the
 plan) — the marking pass is a pure map, no shuffle, and preserves the
@@ -36,12 +39,8 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Column, functions as F, types as T
 
 from autoprepad_spark.datagen import VOCAB_SIZE
+from autoprepad_spark.functions import stats as FS
 from autoprepad_spark.operators.profile import ProfileStats
-
-MAD_SCALE = 0.6745  # MedianAbsolutDeviation.py:56
-MAD_THRESHOLD = 3.5  # MedianAbsolutDeviation.py:36
-Z_THRESHOLD = 3.0  # ZTransformerMean.py:32
-TUKEY_FACTOR = 1.5  # TukeyTransformer.py:33
 
 #: check-name -> flag column (order defines severity tie-break ordering)
 ROW_CHECKS = [
@@ -88,8 +87,8 @@ class CustomCheck:
                observed rate). Ignored when hard=True.
 
     SQL-string and native Column predicates evaluate JVM-side
-    (whole-stage codegen) regardless of the suite's marking engine, so
-    arrow and native runs produce identical custom flags. A Column
+    (whole-stage codegen) in both ``mark_slim`` and the ``mark`` oracle,
+    so the two produce identical custom flags. A Column
     backed by a pandas UDF — such as the bounds-as-data range check
     suggest.grouped_to_custom_checks emits above max_arms_per_check —
     evaluates in Arrow Python workers instead, with the same flags.
@@ -149,7 +148,7 @@ def _flags_numpy(
     vocab_size: int,
 ) -> dict[str, np.ndarray]:
     """Vectorized predicate kernel (numpy) behind the Arrow flag UDF."""
-    lo, hi = stats.tukey_bounds
+    rs = stats.robust
     out: dict[str, np.ndarray] = {}
     out["f_null_doc_id"] = doc_null.astype(np.int32)
     with np.errstate(invalid="ignore"):
@@ -157,15 +156,15 @@ def _flags_numpy(
         has = lengths > 0
         out["f_token_oob"] = (has & ((tok_min < 0) | (tok_max >= vocab_size))).astype(np.int32)
         out["f_empty_tokens"] = (lengths == 0).astype(np.int32)
-        out["f_ntok_tukey"] = ((n_tok < lo) | (n_tok > hi)).astype(np.int32)
-        if stats.mad_n_tok > 0:  # zero-MAD guard, MedianAbsolutDeviation.py:44-45
-            zmod = MAD_SCALE * (n_tok - stats.median_n_tok) / stats.mad_n_tok
-            out["f_ntok_mad"] = (np.abs(zmod) > MAD_THRESHOLD).astype(np.int32)
+        out["f_ntok_tukey"] = ((n_tok < rs.tukey_lo) | (n_tok > rs.tukey_hi)).astype(np.int32)
+        if rs.mad > 0:  # zero-MAD guard, MedianAbsolutDeviation.py:44-45
+            zmod = FS.MAD_SCALE * (n_tok - rs.median) / rs.mad
+            out["f_ntok_mad"] = (np.abs(zmod) > FS.MAD_THRESHOLD).astype(np.int32)
         else:
             out["f_ntok_mad"] = np.zeros(len(n_tok), dtype=np.int32)
-        if stats.std_n_tok > 0:  # zero-std guard, ZTransformerMean.py:50-51
-            z = (n_tok - stats.mean_n_tok) / stats.std_n_tok
-            out["f_ntok_z"] = (np.abs(z) > Z_THRESHOLD).astype(np.int32)
+        if rs.std > 0:  # zero-std guard, ZTransformerMean.py:50-51
+            z = (n_tok - rs.mean) / rs.std
+            out["f_ntok_z"] = (np.abs(z) > FS.Z_THRESHOLD).astype(np.int32)
         else:
             out["f_ntok_z"] = np.zeros(len(n_tok), dtype=np.int32)
     return out
@@ -205,38 +204,6 @@ def _arrow_array_flag_udf(stats: ProfileStats, vocab_size: int):
         return pa.array(_pack_flags(out), type=pa.int32())
 
     return flags
-
-
-def _native_flag_cols(stats: ProfileStats, vocab_size: int) -> dict[str, Column]:
-    lo, hi = stats.tukey_bounds
-    nt = F.col("n_tok").cast("double")
-    size = F.coalesce(F.size("tokens"), F.lit(-1))
-    cols: dict[str, Column] = {
-        "f_null_doc_id": F.isnull("doc_id").cast("int"),
-        "f_len_mismatch": F.coalesce(
-            (size != F.coalesce(nt, F.lit(-1.0))).cast("int"), F.lit(1)
-        ),
-        "f_token_oob": F.coalesce(
-            (
-                (size > 0)
-                & ((F.array_min("tokens") < 0) | (F.array_max("tokens") >= vocab_size))
-            ).cast("int"),
-            F.lit(0),
-        ),
-        "f_empty_tokens": (size == 0).cast("int"),
-        "f_ntok_tukey": F.coalesce(((nt < lo) | (nt > hi)).cast("int"), F.lit(0)),
-    }
-    if stats.mad_n_tok > 0:
-        zmod = MAD_SCALE * (nt - stats.median_n_tok) / stats.mad_n_tok
-        cols["f_ntok_mad"] = F.coalesce((F.abs(zmod) > MAD_THRESHOLD).cast("int"), F.lit(0))
-    else:
-        cols["f_ntok_mad"] = F.lit(0)
-    if stats.std_n_tok > 0:
-        z = (nt - stats.mean_n_tok) / stats.std_n_tok
-        cols["f_ntok_z"] = F.coalesce((F.abs(z) > Z_THRESHOLD).cast("int"), F.lit(0))
-    else:
-        cols["f_ntok_z"] = F.lit(0)
-    return cols
 
 
 def _unpack_flags() -> list[Column]:
@@ -358,7 +325,7 @@ def mark_slim(
     unflagged rows instead of filtering them. Predicates still evaluate
     vectorized in python over Arrow batches (north-rule contract).
 
-    Flags are bit-identical to mark(engine="arrow")'s.
+    Flags are bit-identical to the ``mark`` oracle's.
 
     custom: extra CustomCheck constraints. Their predicates (and detail
     expressions) are computed in the SAME projection as the built-in
@@ -378,49 +345,43 @@ def mark(
     stats: ProfileStats,
     *,
     vocab_size: int = VOCAB_SIZE,
-    engine: str = "arrow",
     allowed_sources: list[str] | None = None,
     custom: list[CustomCheck] | None = None,
 ) -> DataFrame:
-    """Append one 0/1 flag column per row check plus ``flag_total``.
+    """The parity oracle: one 0/1 flag column per row check plus
+    ``flag_total``, every predicate a Catalyst Column expression.
 
     Pure projection (no shuffle); input columns pass through untouched.
-
-    allowed_sources: when given, the referential check rides this same
-    pass as a JVM ``isin`` flag (``f_ref_source``) against the literal
-    allowed set — eliminating the separate fact-table scan + anti-join
-    the standalone operator costs. Correct whenever the dimension is
-    small enough to collect (the broadcast side would have to fit in
-    executor memory anyway); large dims use operators.referential.
-    Null sources are not flagged here (completeness covers them).
-
-    custom: extra CustomCheck constraints, appended as ``f_<name>`` (and
-    ``_d_<name>`` detail) columns — JVM expressions regardless of the
-    predicate engine, so arrow and native runs agree bit-for-bit. Input
-    columns named ``f_*`` would collide with the flag convention that
-    explode_violations auto-discovers; the suite's schema validation
-    plus validate_custom_checks keep the namespace clean.
+    Takes the same arguments as ``mark_slim`` and flags every row the
+    same; ``allowed_sources`` adds the referential ``f_ref_source`` flag
+    (null sources are not flagged: completeness covers them) and
+    ``custom`` the ``f_<name>`` (and ``_d_<name>`` detail) columns.
+    Input columns named ``f_*`` would collide with the flag convention
+    that explode_violations auto-discovers; the suite's schema
+    validation plus validate_custom_checks keep the namespace clean.
     """
     custom = validate_custom_checks(custom)
-    if engine == "arrow":
-        udf = _arrow_array_flag_udf(stats, vocab_size)
-        out = df.withColumn(
-            "_flags",
-            udf(
-                F.isnull("doc_id"),
-                F.coalesce(F.size("tokens"), F.lit(-1)).cast("long"),
-                F.array_min("tokens").cast("double"),
-                F.array_max("tokens").cast("double"),
-                F.col("n_tok").cast("double"),
-            ),
-        )
-        out = out.select("*", *_unpack_flags()).drop("_flags")
-    elif engine == "native":
-        out = df
-        for name, col in _native_flag_cols(stats, vocab_size).items():
-            out = out.withColumn(name, col)
-    else:  # pragma: no cover
-        raise ValueError(f"unknown engine {engine!r}")
+    nt = F.col("n_tok").cast("double")
+    rs = stats.robust
+    size = F.coalesce(F.size("tokens"), F.lit(-1))
+    flags = {
+        "f_null_doc_id": F.isnull("doc_id").cast("int"),
+        "f_len_mismatch": F.coalesce(
+            (size != F.coalesce(nt, F.lit(-1.0))).cast("int"), F.lit(1)
+        ),
+        "f_token_oob": F.coalesce(
+            (
+                (size > 0)
+                & ((F.array_min("tokens") < 0) | (F.array_max("tokens") >= vocab_size))
+            ).cast("int"),
+            F.lit(0),
+        ),
+        "f_empty_tokens": (size == 0).cast("int"),
+        "f_ntok_tukey": F.coalesce(FS.tukey_flag(nt, rs), F.lit(0)),
+        "f_ntok_mad": F.coalesce(FS.mad_flag(nt, rs), F.lit(0)),
+        "f_ntok_z": F.coalesce(FS.zscore_flag(nt, rs), F.lit(0)),
+    }
+    out = df.select("*", *[c.alias(name) for name, c in flags.items()])
     flag_cols = list(FLAG_COLS)
     for c in custom:
         out = out.withColumn(f"f_{c.name}", c.flag_col())
@@ -432,7 +393,6 @@ def mark(
         out = out.select("*", _ref_flag(allowed_sources))
         flag_cols.append(REF_FLAG)
     # Row-wise horizontal sum (TukeyTransformerTotal.py:25-36 analog).
-    total = None
-    for f in flag_cols:
-        total = F.col(f) if total is None else total + F.col(f)
-    return out.withColumn("flag_total", total.cast("int"))
+    return out.withColumn(
+        "flag_total", FS.flag_total(*[F.col(f) for f in flag_cols])
+    )

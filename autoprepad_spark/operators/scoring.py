@@ -33,8 +33,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from autoprepad_spark.functions.stats import MAD_SCALE, RobustStats
-from autoprepad_spark.operators.profile import weighted_quantiles
+from autoprepad_spark.functions.stats import MAD_SCALE, RobustStats, weighted_quantiles
 
 import numpy as np
 

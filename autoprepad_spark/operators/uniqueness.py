@@ -54,51 +54,44 @@ def duplicate_rows(
     key: str = "doc_id",
     *,
     salts: int = DEFAULT_SALTS,
-    method: str = "hash",
 ) -> DataFrame:
     """All rows participating in a duplicated key, with the partition
     column preserved so verdicts can attribute violations per partition.
 
-    method="hash" (default, the scale path): the candidate phase groups
-    by ``xxhash64(key)`` — an 8-byte shuffle key instead of the raw key
-    string (~3.5x less shuffle volume for doc_id-sized keys), over a scan
-    pruned to the key column alone. Hash-colliding keys that are not real
-    duplicates survive as false-positive candidates, so the (tiny)
-    candidate subset is re-grouped by the EXACT key to confirm — results
-    are exact, the hash only routes the heavy shuffle. The dup-key set is
-    tiny relative to the table (violation rate <<1%), so both join-backs
-    are broadcast semi joins at any scale where duplicates fit the
-    broadcast threshold; otherwise AQE picks a shuffled semi join.
-
-    method="key": single-phase salted grouping on the raw key (the shape
-    duplicate_keys uses); simpler plan, bigger shuffle.
+    The candidate phase groups by ``xxhash64(key)`` — an 8-byte shuffle
+    key instead of the raw key string (~3.5x less shuffle volume for
+    doc_id-sized keys), over a scan pruned to the key column alone.
+    Hash-colliding keys that are not real duplicates survive as
+    false-positive candidates, so the (tiny) candidate subset is
+    re-grouped by the EXACT key to confirm — results are exact, the hash
+    only routes the heavy shuffle. The dup-key set is tiny relative to
+    the table (violation rate <<1%), so both join-backs are broadcast
+    semi joins at any scale where duplicates fit the broadcast
+    threshold; otherwise AQE picks a shuffled semi join.
     """
-    if method == "hash":
-        kh = F.xxhash64(F.col(key)).alias("_kh")
-        keyed = df.filter(F.col(key).isNotNull())
-        # content-derived salt keeps a pathologically hot key from
-        # funneling into one reducer while staying parallelism-independent
-        salt = F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(salts))
-        phase1 = (
-            keyed.select(kh, salt.alias("_salt"))
-            .groupBy("_kh", "_salt")
-            .agg(F.count(F.lit(1)).alias("_cnt"))
-        )
-        cand = (
-            phase1.groupBy("_kh")
-            .agg(F.sum("_cnt").alias("_n"))
-            .filter(F.col("_n") > 1)
-            .select("_kh")
-        )
-        cand_rows = keyed.withColumn("_kh", F.xxhash64(F.col(key))).join(
-            F.broadcast(cand), "_kh", "left_semi"
-        )
-        true_dups = (
-            cand_rows.groupBy(key)
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > 1)
-            .select(key)
-        )
-        return cand_rows.join(F.broadcast(true_dups), key, "left_semi").drop("_kh")
-    dups = duplicate_keys(df, key, salts=salts).select(key)
-    return df.join(F.broadcast(dups), key, "left_semi")
+    kh = F.xxhash64(F.col(key)).alias("_kh")
+    keyed = df.filter(F.col(key).isNotNull())
+    # content-derived salt keeps a pathologically hot key from
+    # funneling into one reducer while staying parallelism-independent
+    salt = F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(salts))
+    phase1 = (
+        keyed.select(kh, salt.alias("_salt"))
+        .groupBy("_kh", "_salt")
+        .agg(F.count(F.lit(1)).alias("_cnt"))
+    )
+    cand = (
+        phase1.groupBy("_kh")
+        .agg(F.sum("_cnt").alias("_n"))
+        .filter(F.col("_n") > 1)
+        .select("_kh")
+    )
+    cand_rows = keyed.withColumn("_kh", F.xxhash64(F.col(key))).join(
+        F.broadcast(cand), "_kh", "left_semi"
+    )
+    true_dups = (
+        cand_rows.groupBy(key)
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .filter(F.col("_n") > 1)
+        .select(key)
+    )
+    return cand_rows.join(F.broadcast(true_dups), key, "left_semi").drop("_kh")

@@ -5,7 +5,7 @@ cleaning (C4 drops pages from a bad-word domain list, Raffel et al.
 2020 §2.2; RefinedWeb weighs a curated blocklist of ~4.6M domains plus
 URL-substring rules, Penedo et al. 2023 §3.1). Three layers:
 
-1. ``url_parts`` — scheme/host/path extraction as pure codegen
+1. ``url_part`` — scheme/host/path extraction as pure codegen
    ``regexp_extract`` expressions. Patterns stay in the RE2-compatible
    subset (no lookaround/backreferences) so Spark (java.util.regex)
    and DuckDB accept the SAME strings verbatim — the oracle replicates
@@ -63,11 +63,6 @@ def url_part(col: Column | str, part: str) -> Column:
     """One URL component (lowercased for scheme/host; '' if absent)."""
     out = F.regexp_extract(_c(col), URL_PATTERNS[part], 1)
     return F.lower(out) if part in ("scheme", "host") else out
-
-
-def url_parts(col: Column | str) -> Column:
-    """struct<scheme,host,path,query> — one codegen projection."""
-    return F.struct(*[url_part(col, p).alias(p) for p in URL_PATTERNS])
 
 
 def domain_of(col: Column | str) -> Column:

@@ -15,8 +15,9 @@ Python worker:
      [part] rows are the per-partition row counts; count/min/max/mean/
      std and the exact quantiles/MAD derive from the cells summed over
      source, and the drift histogram is bucketed from the same cells —
-     all driver-side. With approximate quantiles and no baseline the
-     [part] set is alone.
+     all driver-side. With approximate quantiles the stats come from
+     functions/stats.fit_robust_multi(method="approx") instead, and
+     without a baseline the [part] set is alone.
   2. resume: the checkpoint's completed set is read once (no job at all
      when the checkpoint table does not exist yet) and prunes the
      marking scan, the uniqueness branch and the row counts
@@ -49,17 +50,16 @@ from pyspark.sql import DataFrame, functions as F, types as T
 
 from autoprepad_spark import schema as S
 from autoprepad_spark.datagen import VOCAB_SIZE
+from autoprepad_spark.functions.stats import fit_robust_multi
 from autoprepad_spark.operators import drift as drift_mod
 from autoprepad_spark.operators.marking import (
     CustomCheck,
     ROW_CHECKS,
-    mark,
     mark_slim,
     validate_custom_checks,
 )
 from autoprepad_spark.operators.profile import (
     ProfileStats,
-    global_stats,
     part_and_cell_counts,
     stats_from_ntok_counts,
 )
@@ -141,7 +141,6 @@ class ValidationResult:
 @dataclass
 class ValidationSuite:
     vocab_size: int = VOCAB_SIZE
-    engine: str = "arrow"  # arrow | native predicate evaluation
     exact_quantiles: bool = True  # False -> percentile_approx sketch (scale path)
     stat_max_rate: float = V.STAT_MAX_RATE
     bucket_width: int = drift_mod.DEFAULT_BUCKET_WIDTH
@@ -190,7 +189,10 @@ class ValidationSuite:
             if self.exact_quantiles:
                 stats = stats_from_ntok_counts((v, n) for _, v, n in cells)
             else:
-                stats = global_stats(df, exact_quantiles=False)
+                stats = ProfileStats.from_robust(
+                    sum(part_rows.values()),
+                    fit_robust_multi(df, ["n_tok"], method="approx")["n_tok"],
+                )
 
         # the completed set is read once and prunes both the marking scan
         # and the uniqueness branch; like ~isin(done), the row counts drop
@@ -219,19 +221,12 @@ class ValidationSuite:
             allowed = allowed_sources(dim)
 
         # The plan's marking pass carries no token passthrough (the
-        # validator never emits tokens), so the arrow engine uses
-        # mark_slim, which keeps tokens out of the Arrow UDF's input
-        # queue — see its docstring.
-        if self.engine == "arrow":
-            marked = mark_slim(
-                todo, stats, vocab_size=self.vocab_size, allowed_sources=allowed,
-                custom=custom,
-            )
-        else:
-            marked = mark(
-                todo, stats, vocab_size=self.vocab_size, engine=self.engine,
-                allowed_sources=allowed, custom=custom,
-            )
+        # validator never emits tokens): mark_slim keeps tokens out of
+        # the Arrow UDF's input queue — see its docstring.
+        marked = mark_slim(
+            todo, stats, vocab_size=self.vocab_size, allowed_sources=allowed,
+            custom=custom,
+        )
         # ONE pass reads the token payload: marking (JVM array reductions
         # + Arrow predicate UDF, evaluated once) -> explode the flagged
         # rows, inside the violations job below, which runs exactly once

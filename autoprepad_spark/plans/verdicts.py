@@ -292,9 +292,14 @@ def flag_count_verdicts(check_names: list[str]) -> Callable[[DataFrame], DataFra
 def top_violations(violations: DataFrame, marked: DataFrame, n: int = 100) -> DataFrame:
     """Severity-ordered head — the analog of the reference's sort-desc-by-
     (AnomalyScore, MAD_Total, Tukey_Total) output (runs.py:435).
-    TakeOrderedAndProject: no full sort materialization."""
-    sev = marked.filter(F.col("flag_total") > 0).select(
-        "part", "doc_id", "flag_total"
+    TakeOrderedAndProject: no full sort materialization.
+
+    The flagged rows come from a generator over an expression, not a
+    Filter on ``flag_total``, for the reason ``violation_exploder``
+    gives: the flag UDF is then evaluated once per row."""
+    flagged = F.when(F.col("flag_total") > 0, F.array("flag_total"))
+    sev = marked.select(
+        "part", "doc_id", F.explode(flagged).alias("flag_total")
     )
     return (
         violations.join(sev, ["part", "doc_id"], "left")

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, types as T
 
 # ---------------------------------------------------------------------------
 # Declared schemas (the north-rule data model)
@@ -173,19 +173,3 @@ def _safe_castable(actual: T.DataType, expected: T.DataType) -> bool:
         )
     allowed = _SAFE_WIDENING.get(type(expected), ())
     return isinstance(actual, allowed)
-
-
-def conform(df: DataFrame, expected: T.StructType) -> DataFrame:
-    """Project + cast df into the declared schema (column order included).
-
-    Null-on-failure semantics (try_cast) mirror the reference's
-    errors="coerce" (XCopySchemaTransformer.py:74-98).
-    """
-    cols = []
-    actual = {f.name for f in df.schema.fields}
-    for f in expected.fields:
-        if f.name in actual:
-            cols.append(F.col(f.name).try_cast(f.dataType).alias(f.name))
-        else:
-            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-    return df.select(*cols)

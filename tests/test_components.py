@@ -19,6 +19,7 @@ from autoprepad_spark.sources.tables import (
     coerce_to_schema,
     normalize_sentinels,
     read_csv_typed,
+    read_json_typed,
 )
 
 
@@ -81,6 +82,52 @@ def test_read_csv_typed(spark, tmp_path):
     assert out["doc_id"].isna().sum() == 1
     assert out["n_tok"].isna().sum() == 1
     assert out["source"].isna().sum() == 1
+
+
+def test_read_json_typed(spark, tmp_path):
+    """JSON ingest: sentinels become nulls, a mixed-type field casts
+    null-on-failure, and a key no record carries is left out."""
+    p = str(tmp_path / "in.json")
+    with open(p, "w") as f:
+        f.write('{"doc_id": "d-1", "n_tok": 10, "source": "web"}\n'
+                '{"doc_id": "NaN", "n_tok": "nan", "source": "books"}\n'
+                '{"doc_id": "d-3", "n_tok": "x7", "source": ""}\n')
+    schema = T.StructType(
+        [
+            T.StructField("doc_id", T.StringType()),
+            T.StructField("n_tok", T.IntegerType()),
+            T.StructField("source", T.StringType()),
+            T.StructField("absent", T.StringType()),
+        ]
+    )
+    out = read_json_typed(spark, p, schema)
+    assert out.columns == ["doc_id", "n_tok", "source"]
+    assert dict(out.dtypes)["n_tok"] == "int"
+    got = sorted((tuple(r) for r in out.collect()), key=str)
+    assert got == sorted([("d-1", 10, "web"), (None, None, "books"),
+                          ("d-3", None, None)], key=str)
+
+
+def test_decompose_matches_pandas_date_encoder(spark):
+    """datetimes.decompose gives the reference DateEncoder's pandas
+    fields (dt.year/month/weekday/hour/minute/second; weekday Mon=0)."""
+    from autoprepad_spark.functions.datetimes import decompose
+
+    stamps = ["2024-02-29 23:59:58", "2023-01-01 00:00:00",
+              "2021-07-04 12:30:15", "1999-12-31 06:07:08", None]
+    df = spark.createDataFrame([(s,) for s in stamps], "s string").select(
+        F.to_timestamp("s").alias("ts")
+    )
+    got = [tuple(r) for r in df.select(*decompose("ts")).collect()]
+    assert df.select(*decompose("ts")).columns == [
+        "ts_YEAR", "ts_MONTH", "ts_WKDAY", "ts_HOUR", "ts_MINUTE", "ts_SECOND"]
+    dt = pd.to_datetime(pd.Series(stamps)).dt
+    want = [
+        tuple(None if pd.isna(x) else int(x) for x in row)
+        for row in zip(dt.year, dt.month, dt.weekday, dt.hour, dt.minute, dt.second)
+    ]
+    assert got == want
+    assert df.select(*decompose(F.col("ts"), "d")).columns[0] == "d_YEAR"
 
 
 # ---------------------------------------------------------------------------

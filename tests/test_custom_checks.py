@@ -165,20 +165,26 @@ def test_hard_vs_statistical_rules(spark, frame):
 
 
 def test_engine_parity_arrow_vs_native(spark, frame):
+    """Custom-check violations are the same from the Arrow marker
+    (mark_slim) and from the Column oracle (mark)."""
+    from autoprepad_spark.operators.marking import mark, mark_slim
+    from autoprepad_spark.operators.profile import global_stats
+    from autoprepad_spark.plans.suite import allowed_sources
+    from autoprepad_spark.plans.verdicts import explode_violations
+
     df, _ = frame
-    rows = []
-    for engine in ("arrow", "native"):
-        res = ValidationSuite(
-            engine=engine, custom_checks=_checks()
-        ).run(df, dim=source_dim(spark))
-        rows.append(
-            sorted(
-                (r["part"], r["check_name"], r["doc_id"], r["detail"])
-                for r in res.violations.collect()
-            )
+    stats = global_stats(df)
+    allowed = allowed_sources(source_dim(spark))
+    rows = [
+        sorted(
+            tuple(r)
+            for r in explode_violations(
+                marker(df, stats, allowed_sources=allowed, custom=_checks())
+            ).collect()
         )
-        res.unpersist()
-    assert rows[0] == rows[1]
+        for marker in (mark_slim, mark)
+    ]
+    assert rows[0] and rows[0] == rows[1]
 
 
 def test_single_scan_plan_invariant(spark, frame):

@@ -109,20 +109,22 @@ def test_token_array_invariant(tokens_df):
 
 
 def test_arrow_native_engines_agree(spark, tokens_df):
-    from autoprepad_spark.operators.marking import FLAG_COLS, mark
+    """The Arrow marker (mark_slim) flags every row as the Column oracle
+    (mark) does."""
+    from autoprepad_spark.operators.marking import FLAG_COLS, mark, mark_slim
     from autoprepad_spark.operators.profile import global_stats
 
     stats = global_stats(tokens_df)
     cols = [F.sum(c).alias(c) for c in FLAG_COLS] + [F.sum("flag_total").alias("ft")]
-    a = mark(tokens_df, stats, engine="arrow").agg(*cols).collect()[0]
-    n = mark(tokens_df, stats, engine="native").agg(*cols).collect()[0]
+    a = mark_slim(tokens_df, stats).agg(*cols).collect()[0]
+    n = mark(tokens_df, stats).agg(*cols).collect()[0]
     assert a.asDict() == n.asDict()
 
 
 def test_profile_matches_numpy_oracle(spark, tokens_df):
     from autoprepad_spark.operators.profile import global_stats
 
-    stats = global_stats(tokens_df, exact_quantiles=True)
+    stats = global_stats(tokens_df)
     nt = tokens_df.select("n_tok").toPandas()["n_tok"].to_numpy(dtype=float)
     assert stats.n_rows == len(nt)
     assert stats.mean_n_tok == pytest.approx(np.mean(nt))

@@ -15,7 +15,7 @@ import pytest
 from pyspark.sql import Row
 
 from autoprepad_spark.operators.drift import history_flags
-from autoprepad_spark.operators.marking import MAD_SCALE
+from autoprepad_spark.functions.stats import MAD_SCALE
 
 
 def _oracle(series, threshold=3.5, min_history=3):

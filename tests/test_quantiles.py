@@ -9,7 +9,7 @@ Pure numpy; no SparkSession needed.
 import numpy as np
 from hypothesis import given, settings, strategies as st
 
-from autoprepad_spark.operators.profile import mad_from_counts, weighted_quantiles
+from autoprepad_spark.functions.stats import mad_from_counts, weighted_quantiles
 
 
 def _expand(values, counts):

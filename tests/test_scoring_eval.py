@@ -143,10 +143,16 @@ def test_spearman_plan_has_no_window(spark):
 
 
 def test_duplicate_rows_hash_matches_key_method(spark):
+    """The hash-routed duplicate_rows equals a semi join on the exact
+    duplicate keys."""
+    from autoprepad_spark.operators.uniqueness import duplicate_keys
+
     rows = [(f"d{i % 70}", f"p-{i % 4}", i) for i in range(100)]
     df = spark.createDataFrame(rows, ["doc_id", "part", "n"])
-    got_hash = duplicate_rows(df, "doc_id", method="hash").toPandas()
-    got_key = duplicate_rows(df, "doc_id", method="key").toPandas()
+    got_hash = duplicate_rows(df, "doc_id").toPandas()
+    got_key = df.join(
+        F.broadcast(duplicate_keys(df).select("doc_id")), "doc_id", "left_semi"
+    ).toPandas()
     key = ["doc_id", "part", "n"]
     a = got_hash.sort_values(key).reset_index(drop=True)[key]
     b = got_key.sort_values(key).reset_index(drop=True)[key]
@@ -165,6 +171,34 @@ def test_html_report_sink(spark, tokens_df, dim_df, tmp_path):
     p = tmp_path / "report.html"
     write_report(res, str(p), run_id="t1")
     assert p.read_text().startswith("<!doctype html>")
+    res.unpersist()
+
+
+def test_top_violations_evaluates_the_flag_udf_once(spark, tokens_df, dim_df):
+    """The report's severity head runs the flag UDF once per marking
+    task (no flag_total Filter for Catalyst to push below it) and returns
+    the rows of the Filter-based join."""
+    from conftest import plan_shape
+
+    from autoprepad_spark.plans.suite import ValidationSuite
+
+    res = ValidationSuite().run(tokens_df, dim=dim_df)
+    n = 10**6  # every violation: ties at a cut would make the rows ambiguous
+    top = res.top_violations(n)
+    assert plan_shape(top)["Python"] == 1
+    sev = res.marked.filter(F.col("flag_total") > 0).select(
+        "part", "doc_id", "flag_total"
+    )
+    want = (
+        res.violations.join(sev, ["part", "doc_id"], "left")
+        .orderBy(F.desc_nulls_last("flag_total"), "part", "doc_id")
+        .limit(n)
+    )
+    key = lambda r: tuple(str(x) for x in r)  # noqa: E731
+    got = sorted(map(tuple, top.collect()), key=key)
+    assert got == sorted(map(tuple, want.collect()), key=key)
+    assert len(got) == res.violations.count() > 0
+    assert any(r[-1] is not None for r in got)
     res.unpersist()
 
 
